@@ -798,7 +798,7 @@ object Bench {
         classOf[graft.sources.BareLocalFileSystem].getName)
     // dev: SPARK_GRAFT_EXTRA_CONF="k=v;k=v" applies confs before the
     // sweep — the A/B lever for conf-gated physical experiments
-    // (e.g. spark.graft.curation.compactWrites) without recompiling.
+    // (e.g. spark.sql.adaptive.enabled=false) without recompiling.
     // Applied at BUILDER time, not spark.conf.set after start: core
     // confs (spark.shuffle.*, spark.io.*) are fixed once the context
     // exists, and a silently-ignored A/B arm reads as "no difference"

@@ -1104,6 +1104,11 @@ object NativeExpressions {
     override def inputTypes: Seq[DataType] = Seq(StringType)
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
     override def prettyName: String = "quality_stats"
+    // a zero-length stop word would match empty edge tokens in the
+    // size(filter(toks, isin)) form, which this kernel never checks
+    require(stops.forall(_.nonEmpty),
+      "quality_stats: stop words must be non-empty (an empty stop word " +
+        "breaks the size(filter(toks, isin)) identity)")
 
     @transient private lazy val stopBytes: Array[Array[Byte]] =
       stops.map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toArray
@@ -1259,8 +1264,10 @@ object NativeExpressions {
     override def left: Expression = feats
     override def right: Expression = xs
     // pins the xs scale the kernel reads (ADVICE r19: getDecimal(i,10,6)
-    // over a differently-scaled decimal array would silently misread);
-    // mismatched inputs now fail analysis, never mid-stage
+    // over a differently-scaled decimal array would silently misread):
+    // ImplicitCastInputTypes casts any other decimal array to
+    // array<decimal(10,6)> at analysis, rounding to scale 6, so the
+    // kernel only ever reads the scale it expects
     override def inputTypes: Seq[DataType] = Seq(
       ArrayType(IntegerType), ArrayType(DecimalType(10, 6)))
     override def dataType: DataType = DoubleType

@@ -362,15 +362,8 @@ object CorpusIngest {
     * (empty/garbled marker == absent — crash between create and write
     * must re-derive, never brick).
     */
-  private def pinnedEpoch(fs: FileSystem, cp: Path): Option[Long] = {
-    val marker = new Path(cp, "graft-epoch")
-    if (!fs.exists(marker)) None
-    else {
-      val in = fs.open(marker)
-      val txt = try new String(in.readAllBytes(), "UTF-8").trim finally in.close()
-      txt.toLongOption
-    }
-  }
+  private def pinnedEpoch(fs: FileSystem, cp: Path): Option[Long] =
+    readText(fs, new Path(cp, "graft-epoch")).flatMap(_.toLongOption)
 
   /** Per-checkpoint EPOCH: the corpus is partitioned by
     * (`epoch`, `batch_id`) and a query only ever overwrites partitions
@@ -423,8 +416,7 @@ object CorpusIngest {
       // PREFIX (e.g. "1" of "12") that pins a wrong — possibly another
       // checkpoint's — epoch; rename is atomic on HDFS and local FS
       val tmp = new Path(cp, s"graft-epoch.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(epoch.toString.getBytes("UTF-8")) finally out.close()
+      writeText(fs, tmp, epoch.toString)
       if (fs.rename(tmp, marker)) epoch
       else { // lost a concurrent pin race on the CHECKPOINT — adopt the
         fs.delete(tmp, false) // winner; our claim stays as a gap
@@ -448,30 +440,14 @@ object CorpusIngest {
     * checkpoint resumes and writes more batches — those new batches
     * are exactly as foreign as a new epoch.
     */
-  private def readAbsorbed(fs: FileSystem, cp: Path): Set[(Long, Long)] = {
-    val marker = new Path(cp, AbsorbedMarker)
-    if (!fs.exists(marker)) Set.empty
-    else {
-      val in = fs.open(marker)
-      val txt = try new String(in.readAllBytes(), "UTF-8").trim finally in.close()
-      txt.split("\n").toSeq.flatMap { line =>
-        line.split(",") match {
-          case Array(e, b) =>
-            for (ee <- e.trim.toLongOption; bb <- b.trim.toLongOption) yield (ee, bb)
-          case _ => None
-        }
-      }.toSet
-    }
-  }
+  private def readAbsorbed(fs: FileSystem, cp: Path): Set[(Long, Long)] =
+    readText(fs, new Path(cp, AbsorbedMarker)).fold(Set.empty[(Long, Long)])(parsePairs)
 
   private def writeAbsorbed(fs: FileSystem, cp: Path,
       parts: Set[(Long, Long)]): Unit = {
     fs.mkdirs(cp)
     val tmp = new Path(cp, AbsorbedMarker + ".tmp")
-    val out = fs.create(tmp, true)
-    try out.write(parts.toSeq.sorted.map { case (e, b) => s"$e,$b" }
-      .mkString("\n").getBytes("UTF-8"))
-    finally out.close()
+    writeText(fs, tmp, pairLines(parts))
     if (!fs.rename(tmp, new Path(cp, AbsorbedMarker))) fs.delete(tmp, false)
   }
 
@@ -607,22 +583,40 @@ object CorpusIngest {
     * fixed [[CorpusWriteTasks]] fan-out instead. `sortKeys` pins the
     * in-file row order so file bytes are deterministic across replays
     * (shuffle fetch order otherwise leaks into parquet row order).
-    * Conf-gated (`spark.graft.curation.compactWrites`, default on) as
-    * the A/B lever; row content is identical either way.
     */
   private def clusterForWrite(df: DataFrame, varying: Seq[String],
       sortKeys: Seq[String]): DataFrame = {
-    val compact = df.sparkSession.conf
-      .getOption("spark.graft.curation.compactWrites").forall(_.toBoolean)
-    if (!compact) df
-    else {
-      val re =
-        if (varying.nonEmpty) df.repartition(varying.map(col): _*)
-        else df.repartition(CorpusWriteTasks)
-      if (sortKeys.isEmpty) re else re.sortWithinPartitions(sortKeys.map(col): _*)
-    }
+    val re =
+      if (varying.nonEmpty) df.repartition(varying.map(col): _*)
+      else df.repartition(CorpusWriteTasks)
+    if (sortKeys.isEmpty) re else re.sortWithinPartitions(sortKeys.map(col): _*)
   }
-  private val BandsMetaFile = "_graft_meta"
+
+  /** One micro-batch's rows into its (`epoch`, `batch_id`) partition of
+    * `target` with dynamic overwrite — every sink's per-batch write,
+    * corpus and sidecars alike. `bucket` is the one partition column
+    * that varies within the batch (clustered on, see [[clusterForWrite]]);
+    * `sortKeys` pins the in-file row order.
+    */
+  private def writePartition(rows: DataFrame, target: String,
+      bucket: Option[String], sortKeys: Seq[String], epoch: Long,
+      batchId: Long): Unit =
+    clusterForWrite(rows, bucket.toSeq, sortKeys)
+      .withColumn("epoch", lit(epoch))
+      .withColumn("batch_id", lit(batchId))
+      .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy(bucket.toSeq ++ Seq("epoch", "batch_id"): _*)
+      .parquet(target)
+
+  /** A sidecar table's per-batch write: rows come from in-batch data (no
+    * signature or fingerprint is recomputed), the table supplies its
+    * bucket column and sort keys.
+    */
+  private def writeBatch(t: Sidecar, corpusPath: String, rows: DataFrame,
+      epoch: Long, batchId: Long): Unit =
+    writePartition(rows, t.path(new Path(corpusPath)).toString, t.bucket,
+      t.sortKeys, epoch, batchId)
 
   /** Version tag of the TEXT CANON feeding shingle/fingerprint hashing
     * ([[graft.functions.Dedup.shingleCanon]] — NFC-first since round
@@ -637,8 +631,225 @@ object CorpusIngest {
     */
   private[graft] val CanonVersion = "nfc1"
 
-  private def bandsMeta(k: Int, bands: Int, shingleN: Int, prefixLen: Int): String =
-    s"k=$k bands=$bands shingleN=$shingleN prefixLen=$prefixLen canon=$CanonVersion"
+  // ------------------------------------------------- sidecar families
+
+  /** One probe/retrieval sidecar table kept beside the corpus under
+    * `<corpus>/<dir>`, laid out `[<bucket>=…/]epoch=N/batch_id=M/`. The
+    * four families — bands, winnow, cells, postings (with its stats
+    * table as `dependent`) — share one crash-safe lifecycle, written
+    * once against this description: [[ensure]] (pin, refuse, adopt),
+    * [[reconcile]] (backfill, sweep), [[writeBatch]], [[removeAndReindex]]
+    * and [[auditCorpus]].
+    *  - `name`: the stem of the family's [[FaultInjection]] windows;
+    *  - `label`: how refusals name it;
+    *  - `bucket`: the leading partition column (`None`: epoch/batch_id only);
+    *  - `sortKeys`: in-file row order of the per-batch write;
+    *  - `meta`: the parameters pinned in `<dir>/_graft_meta` — probing
+    *    rows built under other parameters is silent semantic drift, so
+    *    a mismatch is refused; [[fromMeta]] rebuilds a family from it;
+    *  - `rows`: sidecar rows derived from corpus rows that carry their
+    *    (epoch, batch_id) columns (adoption, backfill, compaction, erasure);
+    *  - `dependent`: a table written after this one and reconciled,
+    *    re-indexed and audited with it.
+    */
+  private final case class Sidecar(name: String, label: String, dir: String,
+      bucket: Option[String], sortKeys: Seq[String], meta: String,
+      rows: DataFrame => DataFrame, dependent: Option[Sidecar] = None) {
+    def partCols: Seq[String] = bucket.toSeq ++ Seq("epoch", "batch_id")
+    def bucketGlob: Option[String] = bucket.map(b => s"$b=*")
+    def leafGlob: String = bucketGlob.fold("")(g => s"$g/") + "epoch=*/batch_id=*"
+    def path(corpusDir: Path): Path = new Path(corpusDir, dir)
+    /** This table, then its dependent: write and reconcile order. */
+    def tables: Seq[Sidecar] = this +: dependent.toSeq
+  }
+
+  private val MetaFile = "_graft_meta"
+
+  /** A bookkeeping file's trimmed UTF-8 text, or None when absent. */
+  private def readText(fs: FileSystem, f: Path): Option[String] =
+    if (!fs.exists(f)) None
+    else {
+      val in = fs.open(f)
+      try Some(new String(in.readAllBytes(), "UTF-8").trim) finally in.close()
+    }
+
+  private def writeText(fs: FileSystem, f: Path, text: String): Unit = {
+    val out = fs.create(f, true)
+    try out.write(text.getBytes("UTF-8")) finally out.close()
+  }
+
+  /** The pinned parameter string of the sidecar at `idx`, if any. */
+  private def readMeta(fs: FileSystem, idx: Path): Option[String] =
+    readText(fs, new Path(idx, MetaFile))
+
+  private def writeMeta(fs: FileSystem, idx: Path, meta: String): Unit =
+    writeText(fs, new Path(idx, MetaFile), meta)
+
+  /** The integer `key=` field of a pinned meta string. */
+  private def metaInt(meta: String, key: String): Int =
+    meta.split("\\s+").collectFirst {
+      case s if s.startsWith(s"$key=") => s.stripPrefix(s"$key=").toInt
+    }.getOrElse(throw new IllegalStateException(
+      s"unparseable sidecar meta '$meta' (missing $key=)"))
+
+  /** The family stored under `<corpus>/<dir>`, rebuilt from its pinned
+    * `meta`. Parameters are parsed only when `rows` runs, so the layout
+    * of a sidecar whose pin is missing or garbled is still available to
+    * [[auditCorpus]].
+    */
+  private def fromMeta(dir: String, meta: String): Sidecar = {
+    def p(key: String): Int = metaInt(meta, key)
+    dir match {
+      case BandsDir => Sidecar("bands", "band index", dir, Some("pfx"),
+        Seq("bh", "band"), meta, bandIndexRows(_, p("bands"), p("prefixLen")))
+      case WinnowDir => Sidecar("winnow", "winnow index", dir, Some("pfx"),
+        Seq("fp_hash", "doc_id"), meta,
+        winnowIndexRows(_, p("k"), p("w"), p("prefixLen")))
+      case CellsDir => Sidecar("cells", "cell index", dir, Some("cell"),
+        Seq("doc_id"), meta, cellIndexRows)
+      case PostingsDir => Sidecar("postings", "postings sidecar", dir,
+        Some("bkt"), Nil, meta, postingsIndexRows(_, p("buckets")),
+        Some(Sidecar("postings-stats", "stats twin", PostingsStatsDir, None,
+          Nil, "", postingsStatsRows)))
+    }
+  }
+
+  private def bandsSidecar(k: Int, bands: Int, shingleN: Int, prefixLen: Int): Sidecar =
+    fromMeta(BandsDir,
+      s"k=$k bands=$bands shingleN=$shingleN prefixLen=$prefixLen canon=$CanonVersion")
+
+  private def winnowSidecar(k: Int, w: Int, prefixLen: Int): Sidecar =
+    fromMeta(WinnowDir, s"k=$k w=$w prefixLen=$prefixLen canon=$CanonVersion")
+
+  /** Cell assignment is only stable under the SAME centroids — the pin
+    * carries their exact bytes, not just the shape.
+    */
+  private def cellsSidecar(cm: Array[Array[Double]]): Sidecar =
+    fromMeta(CellsDir,
+      s"nCells=${cm.length} dim=${cm.headOption.map(_.length).getOrElse(0)} " +
+        s"centroids=${centroidFingerprint(cm)}")
+
+  private def postingsSidecar(buckets: Int): Sidecar =
+    fromMeta(PostingsDir, s"buckets=$buckets tok=ws-lower")
+
+  /** The family pinned under `<corpus>/<dir>`, or None without a pin. */
+  private def pinned(fs: FileSystem, corpusDir: Path, dir: String): Option[Sidecar] =
+    readMeta(fs, new Path(corpusDir, dir)).map(fromMeta(dir, _))
+
+  /** Every family among `dirs` whose directory exists, from its pin; a
+    * directory without one is refused — re-indexing it blind would
+    * leave rows of removed docs behind.
+    */
+  private def presentSidecars(fs: FileSystem, corpusDir: Path,
+      dirs: Seq[String] = SidecarDirs): Seq[Sidecar] =
+    dirs.filter(d => fs.exists(new Path(corpusDir, d))).map { d =>
+      pinned(fs, corpusDir, d).getOrElse(throw new IllegalArgumentException(
+        s"sidecar at ${new Path(corpusDir, d)} has no pinned meta — delete " +
+          "the directory to trigger a rebuild"))
+    }
+
+  /** Ensure the family's sidecar exists, matches `fam.meta`, and covers
+    * exactly the corpus's (epoch, batch_id) partitions; run at every
+    * sink start and by the batch `build*Index` entries:
+    *  - no corpus data yet → create the directory and pin the meta;
+    *  - corpus data but no sidecar (an existing corpus being adopted)
+    *    → run `beforeAdopt` (band adoption's [[rebandStaleBatches]]),
+    *    build the whole sidecar from stored corpus rows into
+    *    `<dir>.tmp`, pin it there and rename it in, so a crash mid-build
+    *    never leaves a partial sidecar that later batches would trust (a
+    *    partial probe side silently re-admits near-dups); dependents
+    *    are reconciled after the rename;
+    *  - sidecar present with a DIFFERENT pin → refuse loudly. The pins
+    *    include the text-canon version ([[CanonVersion]]) and the exact
+    *    centroid bytes, so a sidecar built before a canon change or
+    *    under other centroids takes the same refuse-and-rebuild path;
+    *  - sidecar present and matching → [[reconcile]] it and its
+    *    dependents.
+    */
+  private def ensure(spark: SparkSession, corpusPath: String, fam: Sidecar,
+      beforeAdopt: () => Unit = () => ()): Unit = {
+    val (fs, corpusDir) = fsFor(spark, corpusPath)
+    val idx = fam.path(corpusDir)
+    if (fs.exists(idx)) {
+      val got = readMeta(fs, idx)
+      val keys = fam.meta.split(" ").map(_.takeWhile(_ != '=')).mkString("/")
+      require(got.contains(fam.meta),
+        s"${fam.label} at $idx was built with ${got.getOrElse("unknown parameters")} " +
+          s"but this sink uses ${fam.meta} — use matching $keys or delete the " +
+          "directory to trigger a rebuild")
+      fam.tables.foreach(reconcile(spark, corpusPath, _))
+    } else if (hasData(fs, corpusDir)) {
+      beforeAdopt()
+      val tmp = new Path(corpusDir, fam.dir + ".tmp")
+      fs.delete(tmp, true)
+      clusterForWrite(fam.rows(spark.read.parquet(corpusPath)), fam.partCols, Nil)
+        .write.mode("overwrite")
+        .partitionBy(fam.partCols: _*)
+        .parquet(tmp.toString)
+      writeMeta(fs, tmp, fam.meta)
+      // plantable: complete sidecar staged in .tmp, rename not yet done —
+      // the re-run deletes the stage and rebuilds (atomicity proof)
+      FaultInjection.maybeTrip(s"adopt-${fam.name}-before-rename")
+      if (!fs.rename(tmp, idx)) {
+        // lost a concurrent-adoption race; the winner's pin must match
+        fs.delete(tmp, true)
+        require(readMeta(fs, idx).contains(fam.meta),
+          s"concurrent ${fam.label} build at $idx finished with different parameters")
+      }
+      // dependents AFTER the rename: a crash here leaves the sidecar
+      // without them, which the next start's reconcile backfills
+      fam.dependent.foreach(reconcile(spark, corpusPath, _))
+    } else {
+      fs.mkdirs(idx)
+      writeMeta(fs, idx, fam.meta)
+    }
+  }
+
+  /** Per-start reconcile of one sidecar table against the corpus. The
+    * sinks write corpus THEN sidecars, so a crash between the two plus
+    * checkpoint loss (the batch never re-fires) leaves a corpus
+    * partition with no sidecar partition. Those batches — plus any a
+    * PRIOR interrupted backfill left in the [[PendingBackfillFile]]
+    * marker — are backfilled: the corpus partitions are read
+    * directory-pruned, rows derived, and dynamic-overwritten, touching
+    * only the leaves present in the derived rows. The marker goes
+    * durable before the write and is cleared after it, so a crash
+    * anywhere inside redoes exactly those pairs; windows
+    * `backfill-<name>-marked` (marker durable, nothing written) and
+    * `backfill-<name>-written` (leaves written, marker not cleared).
+    *
+    * The mirror: sidecar batches the corpus no longer has (a batch
+    * removed out of band) are swept — stale band/fingerprint/cell rows
+    * would FALSELY drop future near-dups of docs that no longer exist,
+    * stale postings would score them. Orphan-pair granularity; stale
+    * extra rows inside a pair both sides still have are healed by the
+    * pending marker.
+    */
+  private def reconcile(spark: SparkSession, corpusPath: String, t: Sidecar): Unit = {
+    val (fs, corpusDir) = fsFor(spark, corpusPath)
+    val idx = t.path(corpusDir)
+    val marker = new Path(idx, PendingBackfillFile)
+    val present = epochBatchDirs(fs, idx, t.leafGlob)
+    val corpusPairs = epochBatchDirs(fs, corpusDir, "epoch=*/batch_id=*")
+    // the marker is read unconditionally: an interrupted prior backfill
+    // must be redone even when the existence diff is clean
+    val todo = (corpusPairs -- present) ++ readPendingBackfill(fs, idx)
+    if (todo.nonEmpty) {
+      writeText(fs, marker, pairLines(todo) + "\n")
+      FaultInjection.maybeTrip(s"backfill-${t.name}-marked")
+      clusterForWrite(
+          t.rows(spark.read.parquet(corpusPath).filter(inPartitionPairs(todo))),
+          t.partCols, Nil)
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(t.partCols: _*)
+        .parquet(idx.toString)
+      FaultInjection.maybeTrip(s"backfill-${t.name}-written")
+    }
+    // done, or a content-empty marker (crash mid-create) carrying no work
+    fs.delete(marker, false)
+    sweepPairDirs(fs, idx, t.bucketGlob, present -- corpusPairs)
+  }
 
   private def bandIndexSchema(): StructType = StructType(Seq(
     StructField("band", IntegerType), StructField("bh", StringType),
@@ -661,22 +872,18 @@ object CorpusIngest {
       }.toSet
     }
 
-  /** Corpus batches the index is missing entirely. The sink writes
-    * corpus THEN index, so after a crash between the two (plus
-    * checkpoint loss, so the batch never re-fires) the corpus partition
-    * exists with no index partition — the double-failure window
-    * ROUND 8 documented as "the index can never stay behind" only while
-    * the checkpoint survives. Reconciled at every query start by
-    * [[reconcileIndex]]; residual: a TORN index write (some bucket
-    * leaf directories committed, some not, within one batch) under the
-    * same double failure still passes this existence diff — strictly
-    * narrower than the whole-batch gap, and the checkpoint replay
-    * covers it in every single-failure scenario.
-    */
-  private def missingIndexBatches(fs: FileSystem, corpusDir: Path,
-      idx: Path, bucketGlob: String): Set[(Long, Long)] =
-    epochBatchDirs(fs, corpusDir, "epoch=*/batch_id=*") --
-      epochBatchDirs(fs, idx, s"$bucketGlob/epoch=*/batch_id=*")
+  /** `epoch,batch_id` lines, sorted — the pair-list file format. */
+  private def pairLines(pairs: Set[(Long, Long)]): String =
+    pairs.toSeq.sorted.map { case (e, b) => s"$e,$b" }.mkString("\n")
+
+  private def parsePairs(text: String): Set[(Long, Long)] =
+    text.linesIterator.flatMap { line =>
+      line.split(",", 2) match {
+        case Array(e, b) =>
+          for (el <- e.trim.toLongOption; bl <- b.trim.toLongOption) yield (el, bl)
+        case _ => None
+      }
+    }.toSet
 
   /** The in-flight-backfill marker: `<idx>/_backfill_pending`, one
     * `epoch,batch_id` line per pair being backfilled. `_`-prefixed, so
@@ -685,7 +892,7 @@ object CorpusIngest {
     * crash ANYWHERE inside the backfill leaves the marker, and the next
     * start redoes exactly those pairs (the overwrite is idempotent:
     * rows re-derive from the same corpus partitions). This closes the
-    * TORN-backfill residual documented on [[missingIndexBatches]]: a
+    * TORN-backfill residual of the existence diff in [[reconcile]]: a
     * backfill that committed SOME bucket leaves of a batch used to make
     * the pair look present to the existence diff and the tear went
     * permanent; with the marker, presence is irrelevant — pending pairs
@@ -693,68 +900,17 @@ object CorpusIngest {
     */
   private val PendingBackfillFile = "_backfill_pending"
 
-  private def readPendingBackfill(fs: FileSystem, idx: Path): Set[(Long, Long)] = {
-    val f = new Path(idx, PendingBackfillFile)
-    if (!fs.exists(f)) Set.empty
-    else {
-      val in = fs.open(f)
-      val text = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-      text.linesIterator.flatMap { line =>
-        line.split(",", 2) match {
-          case Array(e, b) =>
-            for (el <- e.trim.toLongOption; bl <- b.trim.toLongOption)
-              yield (el, bl)
-          case _ => None
-        }
-      }.toSet
-    }
-  }
+  private def readPendingBackfill(fs: FileSystem, idx: Path): Set[(Long, Long)] =
+    readText(fs, new Path(idx, PendingBackfillFile)).fold(Set.empty[(Long, Long)])(parsePairs)
 
-  /** Backfill corpus batches the sidecar is missing — plus any batches
-    * a PRIOR interrupted backfill left marked pending — into the index:
-    * read just those (epoch, batch_id) partitions (directory-pruned),
-    * derive the index rows, and dynamic-overwrite, which touches only
-    * the bucket leaves present in the derived rows and never disturbs
-    * other batches' index partitions. Marker discipline above; the two
-    * [[FaultInjection]] windows (`backfill-<family>-marked`: marker
-    * durable, nothing written; `backfill-<family>-written`: leaves
-    * written, marker not yet cleared) are the plantable crash lattice
-    * for this restart-time writer.
-    */
-  private def backfillIndex(spark: SparkSession, corpusPath: String,
-      missing: Set[(Long, Long)], idx: Path,
-      rows: DataFrame => DataFrame, partCols: Seq[String],
-      family: String): Unit = {
-    val fs = idx.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new Path(idx, PendingBackfillFile)
-    val todo = missing ++ readPendingBackfill(fs, idx)
-    if (todo.isEmpty) {
-      // a content-empty marker (crash mid-create) carries no work; drop it
-      if (fs.exists(marker)) fs.delete(marker, false)
-      return
-    }
-    val out = fs.create(marker, true)
-    try out.write(todo.toSeq.sorted.map { case (e, b) => s"$e,$b" }
-      .mkString("", "\n", "\n").getBytes("UTF-8"))
-    finally out.close()
-    FaultInjection.maybeTrip(s"backfill-$family-marked")
-    clusterForWrite(
-        rows(spark.read.parquet(corpusPath).filter(inPartitionPairs(todo))),
-        partCols, Nil)
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partCols: _*)
-      .parquet(idx.toString)
-    FaultInjection.maybeTrip(s"backfill-$family-written")
-    fs.delete(marker, false)
-  }
-
-  /** Adoption-time canon/parameter heal for a banded corpus: recompute
+  /** Adoption-time canon/parameter heal for a banded corpus, run as the
+    * band family's `beforeAdopt` hook in [[ensure]]: recompute
     * the `band0..` columns from stored TEXT under the CURRENT canon and
     * LSH parameters ([[Dedup.lshSignature]] — the [[rehashCorpus]]
-    * analogue for near-dup signatures), rewrite only the (epoch,
-    * batch_id) partitions where any stored band differs, and return the
-    * rewritten-partition count. Stored bands are DATA: a pre-NFC
+    * analogue for near-dup signatures) and rewrite only the (epoch,
+    * batch_id) partitions where any stored band differs, so the index
+    * built next explodes current-canon columns and corpus and sidecar
+    * stay self-consistent. Stored bands are DATA: a pre-NFC
     * non-ASCII corpus (or one banded under other k/bands/shingleN)
     * carries old-canon hashes, and an index built by trusting them
     * would silently miss decomposed-Unicode near-dups forever — exactly
@@ -763,10 +919,11 @@ object CorpusIngest {
     * and rewrite nothing, so healthy adoption cost is one signature
     * pass. A whole-corpus parameter migration trips
     * [[guardAffectedPairs]] loudly rather than launching one unbounded
-    * rewrite job.
+    * rewrite job; a corpus without band columns (e.g. an exact-dedup
+    * corpus at this path) fails loudly on the column check.
     */
   private def rebandStaleBatches(spark: SparkSession, corpusPath: String,
-      k: Int, bands: Int, shingleN: Int): Long = {
+      k: Int, bands: Int, shingleN: Int): Unit = {
     import spark.implicits._
     val corpus = spark.read.parquet(corpusPath)
     val bandCols = (0 until bands).map(b => s"band$b")
@@ -784,19 +941,22 @@ object CorpusIngest {
       val stale = sig.filter(staleRow)
         .select(col("epoch").cast("long"), col("batch_id").cast("long"))
         .distinct().as[(Long, Long)].collect().toSet
-      if (stale.isEmpty) return 0L
-      guardAffectedPairs(spark, stale.size, "band-index adoption re-band")
-      val healed = sig.filter(inPartitionPairs(stale))
-        .drop(bandCols.map(c => s"__old_$c"): _*)
-        .localCheckpoint(true)
-      try clusterForWrite(healed, Seq("epoch", "batch_id"), Seq("doc_id"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("epoch", "batch_id")
-        .parquet(corpusPath)
-      finally Dedup.freeLocalCheckpoint(healed)
-      stale.size.toLong
+      if (stale.nonEmpty) {
+        guardAffectedPairs(spark, stale.size, "band-index adoption re-band")
+        val healed = sig.filter(inPartitionPairs(stale))
+          .drop(bandCols.map(c => s"__old_$c"): _*)
+          .localCheckpoint(true)
+        try clusterForWrite(healed, Seq("epoch", "batch_id"), Seq("doc_id"))
+          .write.mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic")
+          .partitionBy("epoch", "batch_id")
+          .parquet(corpusPath)
+        finally Dedup.freeLocalCheckpoint(healed)
+      }
     } finally sig.unpersist(false)
+    // plantable: corpus partitions re-banded, index not yet built —
+    // the re-run finds zero stale rows and proceeds to the build
+    FaultInjection.maybeTrip("adopt-bands-after-reband")
   }
 
   /** Band-index rows from corpus rows carrying `band0..` columns. */
@@ -808,103 +968,6 @@ object CorpusIngest {
         bands, Seq("epoch", "batch_id"))
       .withColumn("pfx", substring(col("bh"), 1, prefixLen))
       .select("band", "bh", "pfx", "epoch", "batch_id")
-
-  /** Ensure `<corpus>/_graft_bands` exists and matches this sink's LSH
-    * parameters; called once at query start.
-    *  - no corpus yet → create the index dir and pin the parameters;
-    *  - corpus data but no index (a round-7-layout corpus being adopted)
-    *    → ONE-TIME backfill: stored band columns are first re-verified
-    *    against a from-text recompute under the current canon and any
-    *    drifted partitions rewritten ([[rebandStaleBatches]]), then the
-    *    index is built from them, written to `_graft_bands.tmp` and
-    *    atomically renamed so a crash mid-backfill can never leave a
-    *    partial index that later batches would trust (a partial probe
-    *    side silently re-admits near-dups);
-    *  - index present with DIFFERENT parameters → refuse loudly (probing
-    *    bands built under another k/bands/shingleN is silent semantic
-    *    drift, not an error Spark would surface). The pinned parameters
-    *    include the TEXT-CANON version ([[CanonVersion]]), so a sidecar
-    *    built before a canon change (e.g. the round-12 NFC unification)
-    *    hits the same refuse-and-rebuild path instead of silently
-    *    missing decomposed-Unicode near-dups;
-    *  - index present and matching → reconcile: backfill any corpus
-    *    batch the index is missing ([[missingIndexBatches]] — the
-    *    crash-between-writes-plus-checkpoint-loss window).
-    */
-  private def ensureBandIndex(spark: SparkSession, corpusPath: String,
-      k: Int, bands: Int, shingleN: Int, prefixLen: Int): Unit = {
-    val (fs, corpusDir) = fsFor(spark, corpusPath)
-    val idx = new Path(corpusDir, BandsDir)
-    val expected = bandsMeta(k, bands, shingleN, prefixLen)
-    def readMeta(at: Path): Option[String] = {
-      val f = new Path(at, BandsMetaFile)
-      if (!fs.exists(f)) None
-      else {
-        val in = fs.open(f)
-        try Some(new String(in.readAllBytes(), "UTF-8").trim) finally in.close()
-      }
-    }
-    def writeMeta(at: Path): Unit = {
-      val out = fs.create(new Path(at, BandsMetaFile), true)
-      try out.write(expected.getBytes("UTF-8")) finally out.close()
-    }
-    if (fs.exists(idx)) {
-      val got = readMeta(idx)
-      require(got.contains(expected),
-        s"band index at $idx was built with ${got.getOrElse("unknown parameters")} " +
-          s"but this sink uses $expected — use matching k/bands/shingleN/prefixLen " +
-          "or rebuild the index (delete the directory to trigger a backfill)")
-      // unconditional: an interrupted prior backfill leaves a pending
-      // marker that must be redone even when the existence diff is clean
-      backfillIndex(spark, corpusPath,
-        missingIndexBatches(fs, corpusDir, idx, "pfx=*"), idx,
-        bandIndexRows(_, bands, prefixLen), Seq("pfx", "epoch", "batch_id"),
-        "bands")
-      // orphan sweep (the backfill's mirror): stale band rows for a
-      // batch removed out-of-band would FALSELY drop future near-dups
-      // of docs that no longer exist
-      sweepPairDirs(fs, idx, Some("pfx=*"),
-        epochBatchDirs(fs, idx, "pfx=*/epoch=*/batch_id=*") --
-          epochBatchDirs(fs, corpusDir, "epoch=*/batch_id=*"))
-    } else if (hasData(fs, corpusDir)) {
-      // adoption backfill: FIRST heal any canon/parameter drift in the
-      // stored band columns by recomputing them from text under the
-      // current canon and rewriting drifted partitions
-      // ([[rebandStaleBatches]] — adoption previously trusted stored
-      // bands, so a pre-NFC non-ASCII corpus got an old-canon index
-      // stamped canon=nfc1 and the drift went permanently silent), THEN
-      // explode the (now current-canon) stored columns once. Corpus and
-      // sidecar stay self-consistent: compaction re-pairs under the
-      // same healed columns. A corpus without band columns (e.g. an
-      // exact-dedup corpus at this path) fails loudly on the re-band's
-      // column check.
-      rebandStaleBatches(spark, corpusPath, k, bands, shingleN)
-      // plantable: corpus partitions re-banded, index not yet built —
-      // the re-run finds zero stale rows and proceeds to the build
-      FaultInjection.maybeTrip("adopt-bands-after-reband")
-      val tmp = new Path(corpusDir, BandsDir + ".tmp")
-      fs.delete(tmp, true)
-      clusterForWrite(
-          bandIndexRows(spark.read.parquet(corpusPath), bands, prefixLen),
-          Seq("pfx", "epoch", "batch_id"), Nil)
-        .write.mode("overwrite")
-        .partitionBy("pfx", "epoch", "batch_id")
-        .parquet(tmp.toString)
-      writeMeta(tmp)
-      // plantable: complete index staged in .tmp, rename not yet done —
-      // the re-run deletes the stage and rebuilds (atomicity proof)
-      FaultInjection.maybeTrip("adopt-bands-before-rename")
-      if (!fs.rename(tmp, idx)) {
-        // lost a concurrent-adoption race; the winner's index must match
-        fs.delete(tmp, true)
-        require(readMeta(idx).contains(expected),
-          s"concurrent band-index build at $idx finished with different parameters")
-      }
-    } else {
-      fs.mkdirs(idx)
-      writeMeta(idx)
-    }
-  }
 
   /** The per-batch benchmark-contamination gate (qd22's
     * [[TextAnalysis.decontaminate]] as a sink stage): a batch doc
@@ -1003,7 +1066,9 @@ object CorpusIngest {
     // backfill can re-derive sidecar rows from still-doomed corpus rows
     resumePendingErasure(docs.sparkSession, corpusPath)
     val epoch = queryEpoch(docs.sparkSession, corpusPath, checkpoint)
-    ensureBandIndex(docs.sparkSession, corpusPath, k, bands, shingleN, prefixLen)
+    val fam = bandsSidecar(k, bands, shingleN, prefixLen)
+    ensure(docs.sparkSession, corpusPath, fam,
+      () => rebandStaleBatches(docs.sparkSession, corpusPath, k, bands, shingleN))
     val benchGrams = benchGramSet(benchmark, benchTextCol, benchGramN)
     val q = docs.writeStream
       .outputMode("append")
@@ -1026,24 +1091,11 @@ object CorpusIngest {
         val keepers = Dedup.incrementalNearDupFromSig(sig,
             probeBands(spark, corpusPath, epoch, batchId, pfxs),
             "doc_id", bands)
-        clusterForWrite(keepers, Nil, Seq("doc_id"))
-          .withColumn("epoch", lit(epoch))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("epoch", "batch_id")
-          .parquet(corpusPath)
-        clusterForWrite(
-            Dedup.bandsLong(keepers, bands, Nil)
-              .withColumn("pfx", substring(col("bh"), 1, prefixLen)),
-            Seq("pfx"), Seq("bh", "band"))
-          .withColumn("epoch", lit(epoch))
-          .withColumn("batch_id", lit(batchId))
-          .select("band", "bh", "pfx", "epoch", "batch_id")
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("pfx", "epoch", "batch_id")
-          .parquet(new Path(new Path(corpusPath), BandsDir).toString)
+        writePartition(keepers, corpusPath, None, Seq("doc_id"), epoch, batchId)
+        writeBatch(fam, corpusPath,
+          Dedup.bandsLong(keepers, bands, Nil)
+            .withColumn("pfx", substring(col("bh"), 1, prefixLen)),
+          epoch, batchId)
         // keepers is localCheckpoint'ed (incrementalNearDupFromSig's
         // eager materialization); both writes are done — free its
         // blocks or every batch leaks one resident RDD
@@ -1072,9 +1124,6 @@ object CorpusIngest {
     */
   private val WinnowDir = "_graft_winnow"
 
-  private def winnowMeta(k: Int, w: Int, prefixLen: Int): String =
-    s"k=$k w=$w prefixLen=$prefixLen canon=$CanonVersion"
-
   private def winnowIndexSchema(): StructType = StructType(Seq(
     StructField("doc_id", LongType), StructField("fp_hash", StringType),
     StructField("pfx", StringType), StructField("epoch", LongType),
@@ -1100,56 +1149,6 @@ object CorpusIngest {
       .distinct()
       .withColumn("pfx", substring(col("fp_hash"), 1, prefixLen))
       .select("doc_id", "fp_hash", "pfx", "epoch", "batch_id")
-
-  /** [[ensureBandIndex]]'s discipline for the winnow index: create-and-
-    * pin on a fresh corpus, atomic adoption backfill from stored TEXT
-    * (no extra columns needed — see [[winnowIndexRows]]), loud refusal
-    * on parameter mismatch, missing-batch backfill + orphan sweep on a
-    * matching index.
-    */
-  private def ensureWinnowIndex(spark: SparkSession, corpusPath: String,
-      k: Int, w: Int, prefixLen: Int): Unit = {
-    val (fs, corpusDir) = fsFor(spark, corpusPath)
-    val idx = new Path(corpusDir, WinnowDir)
-    val expected = winnowMeta(k, w, prefixLen)
-    def writeMeta(at: Path): Unit = {
-      val out = fs.create(new Path(at, BandsMetaFile), true)
-      try out.write(expected.getBytes("UTF-8")) finally out.close()
-    }
-    if (fs.exists(idx)) {
-      val got = readIndexMeta(fs, idx)
-      require(got.contains(expected),
-        s"winnow index at $idx was built with ${got.getOrElse("unknown parameters")} " +
-          s"but this sink uses $expected — use matching k/w/prefixLen or " +
-          "delete the index directory to trigger a rebuild")
-      backfillIndex(spark, corpusPath,
-        missingIndexBatches(fs, corpusDir, idx, "pfx=*"), idx,
-        winnowIndexRows(_, k, w, prefixLen), Seq("pfx", "epoch", "batch_id"),
-        "winnow")
-      sweepPairDirs(fs, idx, Some("pfx=*"),
-        epochBatchDirs(fs, idx, "pfx=*/epoch=*/batch_id=*") --
-          epochBatchDirs(fs, corpusDir, "epoch=*/batch_id=*"))
-    } else if (hasData(fs, corpusDir)) {
-      val tmp = new Path(corpusDir, WinnowDir + ".tmp")
-      fs.delete(tmp, true)
-      clusterForWrite(
-          winnowIndexRows(spark.read.parquet(corpusPath), k, w, prefixLen),
-          Seq("pfx", "epoch", "batch_id"), Nil)
-        .write.mode("overwrite")
-        .partitionBy("pfx", "epoch", "batch_id")
-        .parquet(tmp.toString)
-      writeMeta(tmp)
-      FaultInjection.maybeTrip("adopt-winnow-before-rename")
-      if (!fs.rename(tmp, idx)) {
-        fs.delete(tmp, true)
-        require(readIndexMeta(fs, idx).contains(expected),
-          s"concurrent winnow-index build at $idx finished with different parameters")
-      }
-    } else {
-      fs.mkdirs(idx)
-      writeMeta(idx)
-    }
-  }
 
   /** Stored fingerprint rows from buckets matching the batch's own
     * prefixes, minus the batch's own partition (replay must not probe
@@ -1201,7 +1200,8 @@ object CorpusIngest {
       s"need minShared >= 1, maxDf >= 2 (got $minShared, $maxDf)")
     resumePendingErasure(docs.sparkSession, corpusPath)
     val epoch = queryEpoch(docs.sparkSession, corpusPath, checkpoint)
-    ensureWinnowIndex(docs.sparkSession, corpusPath, k, w, prefixLen)
+    val fam = winnowSidecar(k, w, prefixLen)
+    ensure(docs.sparkSession, corpusPath, fam)
     val benchGrams = benchGramSet(benchmark, benchTextCol, benchGramN)
     val q = docs.writeStream
       .outputMode("append")
@@ -1252,24 +1252,11 @@ object CorpusIngest {
           .join(crossHit, Seq("doc_id"), "left_anti")
           .join(withinHit, Seq("doc_id"), "left_anti")
           .localCheckpoint(true)
-        clusterForWrite(keepers, Nil, Seq("doc_id"))
-          .withColumn("epoch", lit(epoch))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("epoch", "batch_id")
-          .parquet(corpusPath)
-        clusterForWrite(
-            keepers.select(col("doc_id")).join(fps, "doc_id")
-              .withColumn("pfx", substring(col("fp_hash"), 1, prefixLen)),
-            Seq("pfx"), Seq("fp_hash", "doc_id"))
-          .withColumn("epoch", lit(epoch))
-          .withColumn("batch_id", lit(batchId))
-          .select("doc_id", "fp_hash", "pfx", "epoch", "batch_id")
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("pfx", "epoch", "batch_id")
-          .parquet(new Path(new Path(corpusPath), WinnowDir).toString)
+        writePartition(keepers, corpusPath, None, Seq("doc_id"), epoch, batchId)
+        writeBatch(fam, corpusPath,
+          keepers.select(col("doc_id")).join(fps, "doc_id")
+            .withColumn("pfx", substring(col("fp_hash"), 1, prefixLen)),
+          epoch, batchId)
         fps.unpersist(false)
         Dedup.freeLocalCheckpoint(stored)
         Dedup.freeLocalCheckpoint(keepers)
@@ -1292,14 +1279,10 @@ object CorpusIngest {
       minShared: Int = 2, maxDf: Int = 50, maxIter: Int = 20): Long = {
     val (fs, corpusDir) = fsFor(spark, corpusPath)
     if (!hasData(fs, corpusDir)) return 0L
-    val idx = new Path(corpusDir, WinnowDir)
-    val meta = readIndexMeta(fs, idx).getOrElse(throw new IllegalArgumentException(
-      s"no winnow index at $idx — compactContainmentCorpus is for corpora " +
-        "written by startContainmentCorpusSink"))
-    def metaInt(key: String): Int = meta.split("\\s+").collectFirst {
-      case s if s.startsWith(s"$key=") => s.stripPrefix(s"$key=").toInt
-    }.getOrElse(throw new IllegalStateException(s"unparseable winnow meta '$meta'"))
-    val (k, w, prefixLen) = (metaInt("k"), metaInt("w"), metaInt("prefixLen"))
+    val fam = pinned(fs, corpusDir, WinnowDir).getOrElse(throw new IllegalArgumentException(
+      s"no winnow index at ${new Path(corpusDir, WinnowDir)} — " +
+        "compactContainmentCorpus is for corpora written by startContainmentCorpusSink"))
+    val (k, w) = (metaInt(fam.meta, "k"), metaInt(fam.meta, "w"))
     val corpus = spark.read.parquet(corpusPath)
       .withColumn("epoch", col("epoch").cast("long"))
       .withColumn("batch_id", col("batch_id").cast("long"))
@@ -1315,9 +1298,8 @@ object CorpusIngest {
       .filter(!col("is_keeper"))
       .select(col("doc_id.doc_id").as("doc_id"),
         col("doc_id.epoch").as("epoch"), col("doc_id.batch_id").as("batch_id"))
-    sweepLosersAndReindex(spark, corpusPath, corpus, losers, WinnowDir,
-      "pfx=*", winnowIndexRows(_, k, w, prefixLen),
-      Seq("pfx", "epoch", "batch_id"))
+    removeAndReindex(spark, corpusPath, corpus, losers, Seq(fam),
+      "index compaction", "compaction")
   }
 
   // ---------------------------------------------- semantic (SemDeDup) sink
@@ -1331,9 +1313,6 @@ object CorpusIngest {
     */
   private val CellsDir = "_graft_cells"
 
-  /** Cell assignment is only stable under the SAME centroids — pin
-    * their exact bytes, not just the shape.
-    */
   private def centroidFingerprint(cm: Array[Array[Double]]): String = {
     val md = java.security.MessageDigest.getInstance("MD5")
     val bb = java.nio.ByteBuffer.allocate(8)
@@ -1343,10 +1322,6 @@ object CorpusIngest {
     })
     md.digest().map("%02x".format(_)).mkString
   }
-
-  private def cellsMeta(cm: Array[Array[Double]]): String =
-    s"nCells=${cm.length} dim=${cm.headOption.map(_.length).getOrElse(0)} " +
-      s"centroids=${centroidFingerprint(cm)}"
 
   private def cellIndexSchema(): StructType = StructType(Seq(
     StructField("doc_id", LongType),
@@ -1361,64 +1336,6 @@ object CorpusIngest {
       col("cell").cast("int").as("cell"),
       col("epoch").cast("long").as("epoch"),
       col("batch_id").cast("long").as("batch_id"))
-
-  /** [[ensureBandIndex]] for the cell index: create-and-pin on a fresh
-    * corpus, ONE atomic backfill when adopting a corpus that already
-    * holds (embedding, cell) columns, loud refusal when the pinned
-    * centroids differ from this sink's (probing cells assigned under
-    * other centroids silently misses near-dups), and the same
-    * missing-batch reconcile at every start.
-    */
-  private def ensureCellIndex(spark: SparkSession, corpusPath: String,
-      cm: Array[Array[Double]]): Unit = {
-    val (fs, corpusDir) = fsFor(spark, corpusPath)
-    val idx = new Path(corpusDir, CellsDir)
-    val expected = cellsMeta(cm)
-    def readMeta(at: Path): Option[String] = {
-      val f = new Path(at, BandsMetaFile)
-      if (!fs.exists(f)) None
-      else {
-        val in = fs.open(f)
-        try Some(new String(in.readAllBytes(), "UTF-8").trim) finally in.close()
-      }
-    }
-    def writeMeta(at: Path): Unit = {
-      val out = fs.create(new Path(at, BandsMetaFile), true)
-      try out.write(expected.getBytes("UTF-8")) finally out.close()
-    }
-    if (fs.exists(idx)) {
-      require(readMeta(idx).contains(expected),
-        s"cell index at $idx was built under different centroids/shape " +
-          s"(${readMeta(idx).getOrElse("unknown")} vs $expected) — use the " +
-          "original centroids or delete the index to trigger a backfill")
-      backfillIndex(spark, corpusPath,
-        missingIndexBatches(fs, corpusDir, idx, "cell=*"), idx,
-        cellIndexRows, Seq("cell", "epoch", "batch_id"), "cells")
-      // orphan sweep, as in the band/postings reconciles: stale cell
-      // rows would falsely drop future semantic dups of deleted docs
-      sweepPairDirs(fs, idx, Some("cell=*"),
-        epochBatchDirs(fs, idx, "cell=*/epoch=*/batch_id=*") --
-          epochBatchDirs(fs, corpusDir, "epoch=*/batch_id=*"))
-    } else if (hasData(fs, corpusDir)) {
-      val tmp = new Path(corpusDir, CellsDir + ".tmp")
-      fs.delete(tmp, true)
-      clusterForWrite(cellIndexRows(spark.read.parquet(corpusPath)),
-          Seq("cell", "epoch", "batch_id"), Nil)
-        .write.mode("overwrite")
-        .partitionBy("cell", "epoch", "batch_id")
-        .parquet(tmp.toString)
-      writeMeta(tmp)
-      FaultInjection.maybeTrip("adopt-cells-before-rename")
-      if (!fs.rename(tmp, idx)) {
-        fs.delete(tmp, true)
-        require(readMeta(idx).contains(expected),
-          s"concurrent cell-index build at $idx finished with different centroids")
-      }
-    } else {
-      fs.mkdirs(idx)
-      writeMeta(idx)
-    }
-  }
 
   /** Stored same-cell vectors, minus the batch's own partition (replay
     * must not probe what it is about to rewrite). `cell`/`epoch`/
@@ -1500,7 +1417,8 @@ object CorpusIngest {
     resumePendingErasure(docs.sparkSession, corpusPath)
     val epoch = queryEpoch(docs.sparkSession, corpusPath, checkpoint)
     val cm = Similarity.Ivf.centroidMatrix(centroids)
-    ensureCellIndex(docs.sparkSession, corpusPath, cm)
+    val fam = cellsSidecar(cm)
+    ensure(docs.sparkSession, corpusPath, fam)
     // same gate, same position as the near-dup sink: a contaminated doc
     // is dropped before cell assignment, so it neither probes nor lands
     val benchGrams = benchGramSet(benchmark, benchTextCol, benchGramN)
@@ -1554,22 +1472,10 @@ object CorpusIngest {
           .select(col("doc_id"), col("text"), col("emb").as("embedding"),
             col("cell"))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        clusterForWrite(keepers, Nil, Seq("doc_id"))
-          .withColumn("epoch", lit(epoch))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("epoch", "batch_id")
-          .parquet(corpusPath)
-        clusterForWrite(
-            keepers.select(col("doc_id"), col("embedding").as("emb"), col("cell")),
-            Seq("cell"), Seq("doc_id"))
-          .withColumn("epoch", lit(epoch))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("cell", "epoch", "batch_id")
-          .parquet(new Path(new Path(corpusPath), CellsDir).toString)
+        writePartition(keepers, corpusPath, None, Seq("doc_id"), epoch, batchId)
+        writeBatch(fam, corpusPath,
+          keepers.select(col("doc_id"), col("embedding").as("emb"), col("cell")),
+          epoch, batchId)
         keepers.unpersist(false)
         assigned.unpersist(false)
         ()
@@ -1593,7 +1499,8 @@ object CorpusIngest {
   private val PostingsDir = "_graft_postings"
   private val PostingsStatsDir = "_graft_postings_stats"
 
-  private def postingsMeta(buckets: Int): String = s"buckets=$buckets tok=ws-lower"
+  /** Every sidecar family's directory, in audit and erasure order. */
+  private val SidecarDirs = Seq(BandsDir, WinnowDir, CellsDir, PostingsDir)
 
   private def postingsSchema(): StructType = StructType(Seq(
     StructField("doc_id", LongType), StructField("dl", LongType),
@@ -1631,86 +1538,6 @@ object CorpusIngest {
         coalesce(sum(col("dl")), lit(0L)).cast("long").as("sum_dl"))
       .select("n_docs", "sum_dl", "epoch", "batch_id")
 
-  /** [[ensureBandIndex]]'s discipline for the postings sidecar:
-    * create-and-pin on a fresh corpus, atomic adoption backfill from
-    * stored text, loud bucket-count mismatch refusal, and per-start
-    * reconcile of batches missing from EITHER the postings data or the
-    * stats table (the stats dir is written after the data dir, so a
-    * crash between them heals here).
-    */
-  private def ensurePostingsIndex(spark: SparkSession, corpusPath: String,
-      buckets: Int): Unit = {
-    val (fs, corpusDir) = fsFor(spark, corpusPath)
-    val idx = new Path(corpusDir, PostingsDir)
-    val statsDir = new Path(corpusDir, PostingsStatsDir)
-    val expected = postingsMeta(buckets)
-    def readMeta(at: Path): Option[String] = {
-      val f = new Path(at, BandsMetaFile)
-      if (!fs.exists(f)) None
-      else {
-        val in = fs.open(f)
-        try Some(new String(in.readAllBytes(), "UTF-8").trim) finally in.close()
-      }
-    }
-    def writeMeta(at: Path): Unit = {
-      val out = fs.create(new Path(at, BandsMetaFile), true)
-      try out.write(expected.getBytes("UTF-8")) finally out.close()
-    }
-    def reconcileInto(target: Path, glob: Option[String],
-        rows: DataFrame => DataFrame, partCols: Seq[String],
-        family: String): Unit = {
-      val present = glob.fold(epochBatchDirs(fs, target, "epoch=*/batch_id=*"))(g =>
-        epochBatchDirs(fs, target, s"$g/epoch=*/batch_id=*"))
-      val corpusDirs = epochBatchDirs(fs, corpusDir, "epoch=*/batch_id=*")
-      // unconditional: an interrupted prior backfill leaves a pending
-      // marker that must be redone even when the existence diff is clean
-      backfillIndex(spark, corpusPath, corpusDirs -- present, target, rows,
-        partCols, family)
-      // the mirror of the backfill: a corpus batch REMOVED outside this
-      // sink (a pre-postings-aware compaction, a manual partition drop)
-      // leaves sidecar rows scoring docs that no longer exist — sweep
-      // them. Orphan-pair granularity; stale EXTRA rows inside a pair
-      // both sides still have are healed by the pending-backfill marker
-      // ([[PendingBackfillFile]]).
-      sweepPairDirs(fs, target, glob, present -- corpusDirs)
-    }
-    if (fs.exists(idx)) {
-      val got = readMeta(idx)
-      require(got.contains(expected),
-        s"postings sidecar at $idx was built with ${got.getOrElse("unknown parameters")} " +
-          s"but this sink uses $expected — match the bucket count or delete the " +
-          "sidecar to trigger a rebuild")
-      reconcileInto(idx, Some("bkt=*"),
-        postingsIndexRows(_, buckets), Seq("bkt", "epoch", "batch_id"),
-        "postings")
-      reconcileInto(statsDir, None, postingsStatsRows,
-        Seq("epoch", "batch_id"), "postings-stats")
-    } else if (hasData(fs, corpusDir)) {
-      val tmp = new Path(corpusDir, PostingsDir + ".tmp")
-      fs.delete(tmp, true)
-      clusterForWrite(
-          postingsIndexRows(spark.read.parquet(corpusPath), buckets),
-          Seq("bkt", "epoch", "batch_id"), Nil)
-        .write.mode("overwrite")
-        .partitionBy("bkt", "epoch", "batch_id")
-        .parquet(tmp.toString)
-      writeMeta(tmp)
-      FaultInjection.maybeTrip("adopt-postings-before-rename")
-      if (!fs.rename(tmp, idx)) {
-        fs.delete(tmp, true)
-        require(readMeta(idx).contains(expected),
-          s"concurrent postings build at $idx finished with different parameters")
-      }
-      // stats AFTER the data rename: a crash here leaves data without
-      // stats, which the next start's reconcile backfills
-      reconcileInto(statsDir, None, postingsStatsRows,
-        Seq("epoch", "batch_id"), "postings-stats")
-    } else {
-      fs.mkdirs(idx)
-      writeMeta(idx)
-    }
-  }
-
   /** Delete the sidecar partition directories of `pairs` under `root`
     * (every matching bucket leaf when `bucketGlob` is set), cleaning
     * emptied parent directories so partition discovery never trips on
@@ -1739,21 +1566,6 @@ object CorpusIngest {
     }
   }
 
-  /** The bucket count a postings sidecar was built with, from its
-    * pinned meta file — refuses loudly when no sidecar exists.
-    */
-  private def postingsBucketsOf(fs: FileSystem, idx: Path): Int = {
-    val metaFile = new Path(idx, BandsMetaFile)
-    require(fs.exists(metaFile),
-      s"no postings sidecar at $idx — ingest with maintainPostings=true " +
-        "or build one with buildPostingsIndex")
-    val in = fs.open(metaFile)
-    val meta = try new String(in.readAllBytes(), "UTF-8").trim finally in.close()
-    meta.split("\\s+").collectFirst {
-      case s if s.startsWith("buckets=") => s.stripPrefix("buckets=").toInt
-    }.getOrElse(throw new IllegalStateException(s"unparseable postings meta '$meta'"))
-  }
-
   /** Batch entry for the BM25 postings sidecar: ensure
     * `<corpus>/_graft_postings` (+ its stats table) exists, matches
     * `buckets`, and covers exactly the corpus's (epoch, batch_id)
@@ -1767,7 +1579,7 @@ object CorpusIngest {
   def buildPostingsIndex(spark: SparkSession, corpusPath: String,
       buckets: Int = 64): Unit = {
     require(buckets >= 1, s"postingsBuckets must be >= 1, got $buckets")
-    ensurePostingsIndex(spark, corpusPath, buckets)
+    ensure(spark, corpusPath, postingsSidecar(buckets))
   }
 
   /** BM25 top-k over an ingested corpus's postings sidecar: ZERO
@@ -1784,7 +1596,10 @@ object CorpusIngest {
     import graft.functions.Retrieval
     val (fs, corpusDir) = fsFor(spark, corpusPath)
     val idx = new Path(corpusDir, PostingsDir)
-    val buckets = postingsBucketsOf(fs, idx)
+    val meta = readMeta(fs, idx).getOrElse(throw new IllegalArgumentException(
+      s"no postings sidecar at $idx — ingest with maintainPostings=true " +
+        "or build one with buildPostingsIndex"))
+    val buckets = metaInt(meta, "buckets")
     val statsRow = spark.read.schema(postingsStatsSchema())
       .parquet(new Path(corpusDir, PostingsStatsDir).toString)
       .agg(sum(col("n_docs")).as("n"), sum(col("sum_dl")).as("s"))
@@ -1847,7 +1662,8 @@ object CorpusIngest {
     val fresh = pinnedEpoch(cpFs, cp).isEmpty
     checkErasureRail(spark, corpusPath, cpFs, cp, fresh, "exact-dedup sink")
     val epoch = queryEpoch(spark, corpusPath, checkpoint)
-    if (maintainPostings) ensurePostingsIndex(spark, corpusPath, postingsBuckets)
+    val postings = postingsSidecar(postingsBuckets)
+    if (maintainPostings) ensure(spark, corpusPath, postings)
     if (fresh) {
       // pin what the initial-state bootstrap is about to absorb: every
       // (epoch, batch_id) partition with data RIGHT NOW. A partition
@@ -1904,29 +1720,15 @@ object CorpusIngest {
               if (maintainPostings)
                 landed0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
               else landed0
-            clusterForWrite(landed, Nil, Seq("doc_id"))
-              .write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("epoch", "batch_id")
-              .parquet(corpusPath)
+            writePartition(landed, corpusPath, None, Seq("doc_id"), epoch, batchId)
             if (maintainPostings) {
               // same (epoch, batch_id) partition discipline as the
               // corpus write: an intact-checkpoint replay rewrites the
               // partitions identically; a crash between the corpus and
               // sidecar writes re-fires the batch; the double-failure
-              // window heals at next start via ensurePostingsIndex
-              val (fs2, corpusDir2) = fsFor(landed.sparkSession, corpusPath)
-              clusterForWrite(postingsIndexRows(landed, postingsBuckets),
-                  Seq("bkt"), Nil)
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("bkt", "epoch", "batch_id")
-                .parquet(new Path(corpusDir2, PostingsDir).toString)
-              clusterForWrite(postingsStatsRows(landed), Nil, Nil)
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("epoch", "batch_id")
-                .parquet(new Path(corpusDir2, PostingsStatsDir).toString)
+              // window heals at next start via the postings reconcile
+              postings.tables.foreach(t =>
+                writeBatch(t, corpusPath, t.rows(landed), epoch, batchId))
               landed.unpersist(false)
             }
             ()
@@ -2074,9 +1876,10 @@ object CorpusIngest {
       val fresh = pinnedEpoch(cpFs, cp).isEmpty
       checkErasureRail(spark, corpusPath, cpFs, cp, fresh, "curation sink")
       val e = queryEpoch(spark, corpusPath, checkpoint)
-      ensureBandIndex(spark, corpusPath, k, bands, shingleN, bandPrefixLen)
-      ensureWinnowIndex(spark, corpusPath, winnowK, winnowW, winnowPrefixLen)
-      ensureCellIndex(spark, corpusPath, cm)
+      ensure(spark, corpusPath, bandsSidecar(k, bands, shingleN, bandPrefixLen),
+        () => rebandStaleBatches(spark, corpusPath, k, bands, shingleN))
+      ensure(spark, corpusPath, winnowSidecar(winnowK, winnowW, winnowPrefixLen))
+      ensure(spark, corpusPath, cellsSidecar(cm))
       if (fresh) {
         val (corpusFs, corpusDir) = fsFor(spark, corpusPath)
         writeAbsorbed(cpFs, cp,
@@ -2198,16 +2001,22 @@ object CorpusIngest {
     * `curation-after-cells-write` (everything written, checkpoint
     * uncommitted — the re-fire must be byte-idempotent).
     *
-    * Round-15 extended the lattice to compaction's loser-removal tail
-    * (three windows in [[sweepLosersAndReindex]]); round 16 extends it
-    * to the RESTART-TIME writers, which run at every query start:
-    * `backfill-{bands,winnow,cells,postings,postings-stats}-{marked,
-    * written}` (the reconcile backfill's pending-marker windows — see
-    * [[backfillIndex]]) and `adopt-bands-after-reband` /
-    * `adopt-{bands,winnow,cells,postings}-before-rename` (the adoption
-    * build's staged-.tmp atomicity windows), plus
-    * `delete-after-{index-sweep,index-append,corpus-rewrite}` in
-    * [[deleteDocs]] (healed by re-running with the same tombstone ids).
+    * The sidecar lifecycle's windows are derived from the family
+    * table ([[Sidecar]]): each routine is written once, and a window's
+    * name is the routine's stem plus the table's `name` (bands, winnow,
+    * cells, postings, postings-stats), so every family gets the same
+    * lattice:
+    *  - `backfill-<name>-{marked,written}` — [[reconcile]]'s pending-
+    *    marker windows, run at every query start;
+    *  - `adopt-<name>-before-rename` — [[ensure]]'s staged-.tmp
+    *    adoption build (dependents have no own adoption: they are
+    *    reconciled after the rename), plus `adopt-bands-after-reband`
+    *    from the band family's adoption hook ([[rebandStaleBatches]]);
+    *  - `<stem>-after-{index-sweep,index-append,corpus-rewrite}` —
+    *    [[removeAndReindex]]'s loser-removal windows, stem `compaction`
+    *    for the compactions and `delete` for [[deleteDocs]] (which adds
+    *    `delete-after-marker`; all heal by re-running the op, the
+    *    erasure with the same tombstone ids).
     */
   private[graft] object FaultInjection {
     private val tripAt =
@@ -2251,7 +2060,6 @@ object CorpusIngest {
       semThreshold: Double, metric: String): Unit = {
     val spark = batch0.sparkSession
     import spark.implicits._
-    val corpusDir = new Path(corpusPath)
     // every persisted/checkpointed frame registers a release thunk the
     // moment it exists, and the finally below runs them all: a batch
     // that FAILS mid-probe (or at a planted FaultInjection point) must
@@ -2365,56 +2173,28 @@ object CorpusIngest {
     toFree += (() => Dedup.freeLocalCheckpoint(finalKeepers))
     // write clustering: see [[clusterForWrite]] — the measured
     // many-tiny-files fix, one writer task per partition dir
-    def clustered(df: DataFrame, varying: Option[String], sortKeys: Seq[String]): DataFrame =
-      clusterForWrite(df, varying.toSeq, sortKeys)
     StageClock.time("write") {
-    clustered(finalKeepers, None, Seq("doc_id"))
-      .withColumn("epoch", lit(epoch))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("epoch", "batch_id")
-      .parquet(corpusPath)
+    writePartition(finalKeepers, corpusPath, None, Seq("doc_id"), epoch, batchId)
     // the crash window the double-failure reconcile routines exist for:
     // corpus written, sidecars not yet
     FaultInjection.maybeTrip("curation-after-corpus-write")
-    clustered(
+    writeBatch(bandsSidecar(k, bands, shingleN, bandPrefixLen), corpusPath,
       Dedup.bandsLong(finalKeepers, bands, Nil)
         .withColumn("pfx", substring(col("bh"), 1, bandPrefixLen)),
-      Some("pfx"), Seq("bh", "band"))
-      .withColumn("epoch", lit(epoch))
-      .withColumn("batch_id", lit(batchId))
-      .select("band", "bh", "pfx", "epoch", "batch_id")
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("pfx", "epoch", "batch_id")
-      .parquet(new Path(corpusDir, BandsDir).toString)
+      epoch, batchId)
     // the sidecar families are non-atomic among THEMSELVES too: each
     // inter-sidecar gap gets its own plantable crash window, so the
     // reconcile/adoption heal is provable per boundary, not just for
     // the corpus-written-sidecars-not case
     FaultInjection.maybeTrip("curation-after-band-write")
-    clustered(
+    writeBatch(winnowSidecar(winnowK, winnowW, winnowPrefixLen), corpusPath,
       finalKeepers.select(col("doc_id")).join(fps, "doc_id")
         .withColumn("pfx", substring(col("fp_hash"), 1, winnowPrefixLen)),
-      Some("pfx"), Seq("fp_hash", "doc_id"))
-      .withColumn("epoch", lit(epoch))
-      .withColumn("batch_id", lit(batchId))
-      .select("doc_id", "fp_hash", "pfx", "epoch", "batch_id")
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("pfx", "epoch", "batch_id")
-      .parquet(new Path(corpusDir, WinnowDir).toString)
+      epoch, batchId)
     FaultInjection.maybeTrip("curation-after-winnow-write")
-    clustered(
+    writeBatch(cellsSidecar(cm), corpusPath,
       finalKeepers.select(col("doc_id"), col("embedding").as("emb"), col("cell")),
-      Some("cell"), Seq("doc_id"))
-      .withColumn("epoch", lit(epoch))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("cell", "epoch", "batch_id")
-      .parquet(new Path(corpusDir, CellsDir).toString)
+      epoch, batchId)
     // all four families written but the checkpoint NOT yet committed:
     // the restart re-fires the whole batch and every dynamic overwrite
     // must be idempotent (same bytes, same partitions)
@@ -2490,7 +2270,6 @@ object CorpusIngest {
     * conf override for a deliberate catch-up run).
     */
   def compactCorpus(spark: SparkSession, corpusPath: String): Long = {
-    import spark.implicits._
     val (fs, corpusDir) = fsFor(spark, corpusPath)
     if (!hasData(fs, corpusDir)) return 0L
     val corpus = spark.read.parquet(corpusPath)
@@ -2510,61 +2289,9 @@ object CorpusIngest {
     val losers = corpus.join(dupKeeper, "content_hash")
       .filter(struct(col("doc_id"), col("epoch"), col("batch_id")) =!= col("__keep"))
       .select(col("content_hash"), col("doc_id"), col("epoch"), col("batch_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val affected = losers.select(col("epoch"), col("batch_id"))
-        .distinct().as[(Long, Long)].collect().toSet
-      if (affected.isEmpty) return 0L
-      guardAffectedPairs(spark, affected.size, "compactCorpus")
-      val removed = losers.count()
-      // keepers of the affected partitions, materialized OFF the file
-      // source (localCheckpoint) so the dynamic overwrite below does not
-      // read the path it rewrites
-      val keepersInAffected = corpus.filter(inPartitionPairs(affected))
-        .join(losers, Seq("content_hash", "doc_id", "epoch", "batch_id"), "left_anti")
-        .localCheckpoint(true)
-      try {
-        // dynamic overwrite only replaces partitions PRESENT in the
-        // written data — a partition whose every row was a loser keeps
-        // its old files and must be swept explicitly
-        val stillThere = keepersInAffected.select(col("epoch"), col("batch_id"))
-          .distinct().as[(Long, Long)].collect().toSet
-        // postings sidecar FIRST (scaladoc ordering note): while the
-        // corpus still holds the losers, any crash below re-runs to the
-        // identical keeper set
-        val idx = new Path(corpusDir, PostingsDir)
-        if (fs.exists(idx)) {
-          val buckets = postingsBucketsOf(fs, idx)
-          val statsDir = new Path(corpusDir, PostingsStatsDir)
-          sweepPairDirs(fs, idx, Some("bkt=*"), affected)
-          clusterForWrite(postingsIndexRows(keepersInAffected, buckets),
-              Seq("bkt", "epoch", "batch_id"), Nil)
-            .write.mode("append")
-            .partitionBy("bkt", "epoch", "batch_id")
-            .parquet(idx.toString)
-          clusterForWrite(postingsStatsRows(keepersInAffected),
-              Seq("epoch", "batch_id"), Nil)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch", "batch_id")
-            .parquet(statsDir.toString)
-          sweepPairDirs(fs, statsDir, None, affected -- stillThere)
-        }
-        clusterForWrite(keepersInAffected, Seq("epoch", "batch_id"), Seq("doc_id"))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("epoch", "batch_id")
-          .parquet(corpusPath)
-        (affected -- stillThere).foreach { case (e, b) =>
-          val batchDir = new Path(corpusDir, s"epoch=$e/batch_id=$b")
-          fs.delete(batchDir, true)
-          val epochDir = batchDir.getParent
-          if (fs.exists(epochDir) && fs.listStatus(epochDir).isEmpty)
-            fs.delete(epochDir, true)
-        }
-      } finally Dedup.freeLocalCheckpoint(keepersInAffected)
-      removed
-    } finally losers.unpersist(false)
+    removeAndReindex(spark, corpusPath, corpus, losers,
+      presentSidecars(fs, corpusDir, Seq(PostingsDir)), "compactCorpus",
+      "compaction")
   }
 
   /** Canon-migration maintenance: recompute `content_hash` under the
@@ -2629,7 +2356,8 @@ object CorpusIngest {
       bands: Int = 4, shingleN: Int = 3, prefixLen: Int = 1): Unit = {
     require(prefixLen >= 1 && prefixLen <= 8,
       s"prefixLen must be in [1,8], got $prefixLen")
-    ensureBandIndex(spark, corpusPath, k, bands, shingleN, prefixLen)
+    ensure(spark, corpusPath, bandsSidecar(k, bands, shingleN, prefixLen),
+      () => rebandStaleBatches(spark, corpusPath, k, bands, shingleN))
   }
 
   /** [[buildBandIndex]] for the semantic sink's cell index —
@@ -2638,7 +2366,7 @@ object CorpusIngest {
     */
   def buildCellIndex(spark: SparkSession, corpusPath: String,
       centroids: DataFrame): Unit =
-    ensureCellIndex(spark, corpusPath, Similarity.Ivf.centroidMatrix(centroids))
+    ensure(spark, corpusPath, cellsSidecar(Similarity.Ivf.centroidMatrix(centroids)))
 
   /** ANN top-k over an ingested corpus's cell sidecar — the dense twin
     * of [[bm25OverCorpus]]: ZERO corpus passes, zero re-embedding. The
@@ -2673,17 +2401,13 @@ object CorpusIngest {
     val (fs, corpusDir) = fsFor(spark, corpusPath)
     val idx = new Path(corpusDir, CellsDir)
     val cm = Similarity.Ivf.centroidMatrix(centroids)
-    val metaFile = new Path(idx, BandsMetaFile)
-    require(fs.exists(metaFile),
+    val meta = readMeta(fs, idx).getOrElse(throw new IllegalArgumentException(
       s"no cell sidecar at $idx — ingest with startSemanticDedupCorpusSink " +
-        "or build one with buildCellIndex")
-    val meta = {
-      val in = fs.open(metaFile)
-      try new String(in.readAllBytes(), "UTF-8").trim finally in.close()
-    }
-    require(meta == cellsMeta(cm),
+        "or build one with buildCellIndex"))
+    val expected = cellsSidecar(cm).meta
+    require(meta == expected,
       s"cell sidecar at $idx was built under different centroids/shape " +
-        s"($meta vs ${cellsMeta(cm)}) — search with the corpus's pinned centroids")
+        s"($meta vs $expected) — search with the corpus's pinned centroids")
     val probes = queries
       .select(col(queryIdCol).as("query_id"),
         Similarity.asDouble(col(vecCol)).as("__qv"))
@@ -2736,50 +2460,61 @@ object CorpusIngest {
     Retrieval.rrfFuse(Seq(sparse, dense), k, rrfK)
   }
 
-  /** Shared loser-removal tail of the near-dup/semantic compactions:
-    * given the loser keys, rewrite the affected corpus partitions
-    * without the losers, keep the sink's sidecar index in step, and
-    * sweep partitions left empty. [[compactCorpus]]'s discipline
-    * generalized: the index is updated FIRST (affected pair directories
-    * deleted outright — a loser's index entries can live in bucket
-    * leaves the keepers never reach — then keeper rows re-derived), so
-    * while the corpus still holds the losers any crash re-runs to the
-    * identical keeper set and every window heals by compacting again.
-    * Losers are identified by (doc_id, epoch, batch_id) — the sinks'
-    * deterministic-keeper key.
+  /** The one loser-removal tail — [[compactCorpus]], the near-dup/
+    * containment/semantic compactions and [[deleteDocs]]: rewrite the
+    * affected corpus partitions without `losers`, keep every table of
+    * `fams` (dependents included) in step, and delete partitions left
+    * with no keepers. The sidecars are updated FIRST — each table's
+    * affected pair directories deleted outright (a loser's rows can
+    * live in bucket leaves the keepers never reach, which a dynamic
+    * overwrite could not touch), then keeper rows re-derived and
+    * appended — so while the corpus still holds the losers any crash
+    * re-runs to the identical keeper set and every window heals by
+    * running the op again. `losers` carries the (doc_id, epoch,
+    * batch_id) key plus any column the keeper anti-join must also
+    * match; `fams` is read once the op is known to touch something, and
+    * `beforeMutation` runs just before the first write. `op` names the
+    * op to the [[guardAffectedPairs]] ceiling; plantable windows are
+    * `<faultStem>-after-{index-sweep,index-append,corpus-rewrite}`.
+    * Returns removed-row count.
     */
-  private def sweepLosersAndReindex(spark: SparkSession, corpusPath: String,
-      corpus: DataFrame, loserKeys: DataFrame, indexDir: String,
-      bucketGlob: String, indexRows: DataFrame => DataFrame,
-      indexPartCols: Seq[String]): Long = {
+  private def removeAndReindex(spark: SparkSession, corpusPath: String,
+      corpus: DataFrame, loserKeys: DataFrame, fams: => Seq[Sidecar],
+      op: String, faultStem: String,
+      beforeMutation: () => Unit = () => ()): Long = {
     import spark.implicits._
     val (fs, corpusDir) = fsFor(spark, corpusPath)
-    val losers = loserKeys.select(col("doc_id"), col("epoch"), col("batch_id"))
+    val losers = loserKeys
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val affected = losers.select(col("epoch"), col("batch_id"))
         .distinct().as[(Long, Long)].collect().toSet
       if (affected.isEmpty) return 0L
-      guardAffectedPairs(spark, affected.size, "index compaction")
+      guardAffectedPairs(spark, affected.size, op)
+      beforeMutation()
       val removed = losers.count()
+      // keepers of the affected partitions, materialized OFF the file
+      // source (localCheckpoint) so the dynamic overwrite below does not
+      // read the path it rewrites
       val keepersInAffected = corpus.filter(inPartitionPairs(affected))
-        .join(losers, Seq("doc_id", "epoch", "batch_id"), "left_anti")
+        .join(losers, losers.columns.toSeq, "left_anti")
         .localCheckpoint(true)
       try {
+        // dynamic overwrite only replaces partitions PRESENT in the
+        // written data — a partition whose every row was a loser keeps
+        // its old files and must be swept explicitly
         val stillThere = keepersInAffected.select(col("epoch"), col("batch_id"))
           .distinct().as[(Long, Long)].collect().toSet
-        val idx = new Path(corpusDir, indexDir)
-        sweepPairDirs(fs, idx, Some(bucketGlob), affected)
-        // crash windows, plantable like the sink boundaries': while the
-        // CORPUS still holds the losers, a re-run re-derives the same
-        // loser set and heals every window below — the design claim the
-        // parameterized compaction-crash tests prove per window
-        FaultInjection.maybeTrip("compaction-after-index-sweep")
-        clusterForWrite(indexRows(keepersInAffected), indexPartCols, Nil)
-          .write.mode("append")
-          .partitionBy(indexPartCols: _*)
-          .parquet(idx.toString)
-        FaultInjection.maybeTrip("compaction-after-index-append")
+        val tables = fams.flatMap(_.tables)
+        tables.foreach(t => sweepPairDirs(fs, t.path(corpusDir), t.bucketGlob, affected))
+        FaultInjection.maybeTrip(s"$faultStem-after-index-sweep")
+        tables.foreach { t =>
+          clusterForWrite(t.rows(keepersInAffected), t.partCols, Nil)
+            .write.mode("append")
+            .partitionBy(t.partCols: _*)
+            .parquet(t.path(corpusDir).toString)
+        }
+        FaultInjection.maybeTrip(s"$faultStem-after-index-append")
         clusterForWrite(keepersInAffected, Seq("epoch", "batch_id"), Seq("doc_id"))
           .write.mode("overwrite")
           .option("partitionOverwriteMode", "dynamic")
@@ -2787,11 +2522,9 @@ object CorpusIngest {
           .parquet(corpusPath)
         // past this point the corpus no longer holds the losers: a
         // crash before the empty-partition sweep just means the next
-        // run finds zero duplicates and the sweep set is empty — the
-        // leftover all-loser partitions were already rewritten away by
-        // the dynamic overwrite above ONLY if they had keepers; fully
-        // emptied partitions are removed here
-        FaultInjection.maybeTrip("compaction-after-corpus-rewrite")
+        // run finds nothing to remove; partitions the dynamic overwrite
+        // could not touch (no keepers left) are removed here
+        FaultInjection.maybeTrip(s"$faultStem-after-corpus-rewrite")
         (affected -- stillThere).foreach { case (e, b) =>
           val batchDir = new Path(corpusDir, s"epoch=$e/batch_id=$b")
           fs.delete(batchDir, true)
@@ -2802,15 +2535,6 @@ object CorpusIngest {
         removed
       } finally Dedup.freeLocalCheckpoint(keepersInAffected)
     } finally losers.unpersist(false)
-  }
-
-  private def readIndexMeta(fs: FileSystem, idx: Path): Option[String] = {
-    val f = new Path(idx, BandsMetaFile)
-    if (!fs.exists(f)) None
-    else {
-      val in = fs.open(f)
-      try Some(new String(in.readAllBytes(), "UTF-8").trim) finally in.close()
-    }
   }
 
   /** [[compactCorpus]] for a NEAR-DUP-sink corpus: remove whatever
@@ -2833,22 +2557,17 @@ object CorpusIngest {
     * sequential sink starts no two kept docs share a band, so every
     * pair found here is a concurrency artifact. Idempotent: after one
     * pass no band-sharing pairs remain. The band index is kept in step
-    * ([[sweepLosersAndReindex]]); `doc_id` must identify a row within
+    * ([[removeAndReindex]]); `doc_id` must identify a row within
     * its partition (the sinks' layout). Returns removed-row count.
     */
   def compactNearDupCorpus(spark: SparkSession, corpusPath: String,
       maxIter: Int = 20): Long = {
     val (fs, corpusDir) = fsFor(spark, corpusPath)
     if (!hasData(fs, corpusDir)) return 0L
-    val idx = new Path(corpusDir, BandsDir)
-    val meta = readIndexMeta(fs, idx).getOrElse(throw new IllegalArgumentException(
-      s"no band index at $idx — compactNearDupCorpus is for corpora written " +
-        "by startNearDupCorpusSink (see compactCorpus for the exact sink)"))
-    def metaInt(key: String): Int = meta.split("\\s+").collectFirst {
-      case s if s.startsWith(s"$key=") => s.stripPrefix(s"$key=").toInt
-    }.getOrElse(throw new IllegalStateException(s"unparseable band meta '$meta'"))
-    val bands = metaInt("bands")
-    val prefixLen = metaInt("prefixLen")
+    val fam = pinned(fs, corpusDir, BandsDir).getOrElse(throw new IllegalArgumentException(
+      s"no band index at ${new Path(corpusDir, BandsDir)} — compactNearDupCorpus is " +
+        "for corpora written by startNearDupCorpusSink (see compactCorpus for the exact sink)"))
+    val bands = metaInt(fam.meta, "bands")
     val corpus = spark.read.parquet(corpusPath)
       .withColumn("epoch", col("epoch").cast("long"))
       .withColumn("batch_id", col("batch_id").cast("long"))
@@ -2869,9 +2588,8 @@ object CorpusIngest {
       .filter(!col("is_keeper"))
       .select(col("doc_id.doc_id").as("doc_id"),
         col("doc_id.epoch").as("epoch"), col("doc_id.batch_id").as("batch_id"))
-    sweepLosersAndReindex(spark, corpusPath, corpus, losers, BandsDir,
-      "pfx=*", bandIndexRows(_, bands, prefixLen),
-      Seq("pfx", "epoch", "batch_id"))
+    removeAndReindex(spark, corpusPath, corpus, losers, Seq(fam),
+      "index compaction", "compaction")
   }
 
   /** [[compactNearDupCorpus]] for a SEMANTIC-sink corpus: candidate
@@ -2896,10 +2614,9 @@ object CorpusIngest {
       s"cosine threshold must be in (0, 1], got $threshold")
     val (fs, corpusDir) = fsFor(spark, corpusPath)
     if (!hasData(fs, corpusDir)) return 0L
-    val idx = new Path(corpusDir, CellsDir)
-    require(readIndexMeta(fs, idx).nonEmpty,
-      s"no cell index at $idx — compactSemanticCorpus is for corpora written " +
-        "by startSemanticDedupCorpusSink")
+    val fam = pinned(fs, corpusDir, CellsDir).getOrElse(throw new IllegalArgumentException(
+      s"no cell index at ${new Path(corpusDir, CellsDir)} — compactSemanticCorpus is " +
+        "for corpora written by startSemanticDedupCorpusSink"))
     val corpus = spark.read.parquet(corpusPath)
       .withColumn("epoch", col("epoch").cast("long"))
       .withColumn("batch_id", col("batch_id").cast("long"))
@@ -2916,17 +2633,11 @@ object CorpusIngest {
       .filter(!col("is_keeper"))
       .select(col("doc_id.doc_id").as("doc_id"),
         col("doc_id.epoch").as("epoch"), col("doc_id.batch_id").as("batch_id"))
-    sweepLosersAndReindex(spark, corpusPath, corpus, losers, CellsDir,
-      "cell=*", cellIndexRows, Seq("cell", "epoch", "batch_id"))
+    removeAndReindex(spark, corpusPath, corpus, losers, Seq(fam),
+      "index compaction", "compaction")
   }
 
   // -------------------------------------------- targeted maintenance ops
-
-  private def metaInt(meta: String, key: String): Int =
-    meta.split("\\s+").collectFirst {
-      case s if s.startsWith(s"$key=") => s.stripPrefix(s"$key=").toInt
-    }.getOrElse(throw new IllegalStateException(
-      s"unparseable sidecar meta '$meta' (missing $key=)"))
 
   // ------------------------------------------------ erasure bookkeeping
 
@@ -3005,21 +2716,15 @@ object CorpusIngest {
   private val ErasureEpochFile = "_graft_erasure_epoch"
   private val CpErasureEpochFile = "graft-erasure-epoch"
 
+  // garbled (crash mid-write of a non-staged legacy file) == 0:
+  // conservative for the checkpoint side (refuses), harmless for the
+  // corpus side (the staged write below never tears)
   private def readCounter(fs: FileSystem, f: Path): Long =
-    if (!fs.exists(f)) 0L
-    else {
-      val in = fs.open(f)
-      val txt = try new String(in.readAllBytes(), "UTF-8").trim finally in.close()
-      // garbled (crash mid-write of a non-staged legacy file) == 0:
-      // conservative for the checkpoint side (refuses), harmless for
-      // the corpus side (the staged write below never tears)
-      txt.toLongOption.getOrElse(0L)
-    }
+    readText(fs, f).flatMap(_.toLongOption).getOrElse(0L)
 
   private def writeCounter(fs: FileSystem, f: Path, v: Long): Unit = {
     val tmp = new Path(f.getParent, f.getName + ".tmp")
-    val out = fs.create(tmp, true)
-    try out.write(v.toString.getBytes("UTF-8")) finally out.close()
+    writeText(fs, tmp, v.toString)
     fs.delete(f, false)
     if (!fs.rename(tmp, f))
       throw new IllegalStateException(s"could not commit counter at $f")
@@ -3128,7 +2833,6 @@ object CorpusIngest {
     */
   def deleteDocs(spark: SparkSession, corpusPath: String,
       docIds: DataFrame): Long = {
-    import spark.implicits._
     require(docIds.columns.contains("doc_id"),
       s"deleteDocs needs a doc_id column; got ${docIds.columns.mkString(", ")}")
     val (fs, corpusDir) = fsFor(spark, corpusPath)
@@ -3138,111 +2842,35 @@ object CorpusIngest {
     // bump (a live exact checkpoint may hold its hashes) even when the
     // re-run finds nothing left to do
     val pending = readPendingErasure(spark, fs, corpusDir)
-    def settlePending(): Unit = if (pending.nonEmpty) {
+    val removed =
+      if (!hasData(fs, corpusDir)) 0L
+      else {
+        val corpus = spark.read.parquet(corpusPath)
+          .withColumn("epoch", col("epoch").cast("long"))
+          .withColumn("batch_id", col("batch_id").cast("long"))
+        val ids = pending.foldLeft(
+            docIds.select(col("doc_id").cast("long").as("doc_id")))(
+            _ unionByName _)
+          .distinct()
+        removeAndReindex(spark, corpusPath, corpus,
+          corpus.select(col("doc_id"), col("epoch"), col("batch_id")).join(ids, "doc_id"),
+          presentSidecars(fs, corpusDir), "deleteDocs", "delete",
+          // the ids go durable BEFORE the first mutation: from here on, a
+          // crash anywhere is healed by the next sink start's
+          // resumePendingErasure, not by operator memory
+          () => {
+            writePendingErasure(fs, corpusDir, ids)
+            FaultInjection.maybeTrip("delete-after-marker")
+          })
+      }
+    // bump BEFORE clearing the marker: a crash between the two leaves a
+    // settled-but-marked state whose re-run removes nothing and settles
+    // again (one redundant bump — refusals stay correct, never missed)
+    if (removed > 0L || pending.nonEmpty) {
       bumpErasureEpoch(fs, corpusDir)
       clearPendingErasure(fs, corpusDir)
     }
-    if (!hasData(fs, corpusDir)) { settlePending(); return 0L }
-    val corpus = spark.read.parquet(corpusPath)
-      .withColumn("epoch", col("epoch").cast("long"))
-      .withColumn("batch_id", col("batch_id").cast("long"))
-    val ids = pending.foldLeft(
-        docIds.select(col("doc_id").cast("long").as("doc_id")))(
-        _ unionByName _)
-      .distinct()
-    val losers = corpus.select(col("doc_id"), col("epoch"), col("batch_id"))
-      .join(ids, "doc_id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val affected = losers.select(col("epoch"), col("batch_id"))
-        .distinct().as[(Long, Long)].collect().toSet
-      if (affected.isEmpty) { settlePending(); return 0L }
-      guardAffectedPairs(spark, affected.size, "deleteDocs")
-      // the ids go durable BEFORE the first mutation: from here on, a
-      // crash anywhere is healed by the next sink start's
-      // resumePendingErasure, not by operator memory
-      writePendingErasure(fs, corpusDir, ids)
-      FaultInjection.maybeTrip("delete-after-marker")
-      val removed = losers.count()
-      val keepersInAffected = corpus.filter(inPartitionPairs(affected))
-        .join(losers, Seq("doc_id", "epoch", "batch_id"), "left_anti")
-        .localCheckpoint(true)
-      try {
-        val stillThere = keepersInAffected.select(col("epoch"), col("batch_id"))
-          .distinct().as[(Long, Long)].collect().toSet
-        // every present sidecar: (dir, bucket glob, rebuild rows, part cols)
-        val bandsIdx = new Path(corpusDir, BandsDir)
-        val winnowIdx = new Path(corpusDir, WinnowDir)
-        val cellsIdx = new Path(corpusDir, CellsDir)
-        val sidecars = Seq.newBuilder[(Path, String, DataFrame => DataFrame, Seq[String])]
-        readIndexMeta(fs, bandsIdx).foreach { m =>
-          sidecars += ((bandsIdx, "pfx=*",
-            bandIndexRows(_, metaInt(m, "bands"), metaInt(m, "prefixLen")),
-            Seq("pfx", "epoch", "batch_id")))
-        }
-        readIndexMeta(fs, winnowIdx).foreach { m =>
-          sidecars += ((winnowIdx, "pfx=*",
-            winnowIndexRows(_, metaInt(m, "k"), metaInt(m, "w"),
-              metaInt(m, "prefixLen")),
-            Seq("pfx", "epoch", "batch_id")))
-        }
-        readIndexMeta(fs, cellsIdx).foreach { _ =>
-          sidecars += ((cellsIdx, "cell=*", cellIndexRows,
-            Seq("cell", "epoch", "batch_id")))
-        }
-        val built = sidecars.result()
-        built.foreach { case (idx, glob, _, _) =>
-          sweepPairDirs(fs, idx, Some(glob), affected)
-        }
-        FaultInjection.maybeTrip("delete-after-index-sweep")
-        built.foreach { case (idx, _, rows, partCols) =>
-          clusterForWrite(rows(keepersInAffected), partCols, Nil)
-            .write.mode("append")
-            .partitionBy(partCols: _*)
-            .parquet(idx.toString)
-        }
-        // postings has its own stats twin — the compactCorpus shape
-        val postingsIdx = new Path(corpusDir, PostingsDir)
-        if (fs.exists(postingsIdx)) {
-          val buckets = postingsBucketsOf(fs, postingsIdx)
-          val statsDir = new Path(corpusDir, PostingsStatsDir)
-          sweepPairDirs(fs, postingsIdx, Some("bkt=*"), affected)
-          clusterForWrite(postingsIndexRows(keepersInAffected, buckets),
-              Seq("bkt", "epoch", "batch_id"), Nil)
-            .write.mode("append")
-            .partitionBy("bkt", "epoch", "batch_id")
-            .parquet(postingsIdx.toString)
-          clusterForWrite(postingsStatsRows(keepersInAffected),
-              Seq("epoch", "batch_id"), Nil)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch", "batch_id")
-            .parquet(statsDir.toString)
-          sweepPairDirs(fs, statsDir, None, affected -- stillThere)
-        }
-        FaultInjection.maybeTrip("delete-after-index-append")
-        clusterForWrite(keepersInAffected, Seq("epoch", "batch_id"), Seq("doc_id"))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("epoch", "batch_id")
-          .parquet(corpusPath)
-        FaultInjection.maybeTrip("delete-after-corpus-rewrite")
-        (affected -- stillThere).foreach { case (e, b) =>
-          val batchDir = new Path(corpusDir, s"epoch=$e/batch_id=$b")
-          fs.delete(batchDir, true)
-          val epochDir = batchDir.getParent
-          if (fs.exists(epochDir) && fs.listStatus(epochDir).isEmpty)
-            fs.delete(epochDir, true)
-        }
-        // bump BEFORE clearing the marker: a crash between the two
-        // leaves a settled-but-marked state whose re-run takes the
-        // affected-empty path above and settles again (one redundant
-        // bump — refusals stay correct, never missed)
-        bumpErasureEpoch(fs, corpusDir)
-        clearPendingErasure(fs, corpusDir)
-        removed
-      } finally Dedup.freeLocalCheckpoint(keepersInAffected)
-    } finally losers.unpersist(false)
+    removed
   }
 
   /** Predicate form of [[deleteDocs]] — compliance requests usually
@@ -3343,7 +2971,7 @@ object CorpusIngest {
     // plantable: corpus re-assigned, sidecar not yet rebuilt — a re-run
     // finds zero stale rows and the adoption build restores the index
     FaultInjection.maybeTrip("refit-after-corpus-rewrite")
-    ensureCellIndex(spark, corpusPath, cm)
+    ensure(spark, corpusPath, cellsSidecar(cm))
     staleCount
   }
 
@@ -3395,16 +3023,14 @@ object CorpusIngest {
       case None => out += (("erasure", "ok",
         s"no pending marker; erasure epoch ${erasureEpochOf(fs, corpusDir)}"))
     }
-    val sidecars = Seq(
-      ("bands", BandsDir, "pfx=*"), ("winnow", WinnowDir, "pfx=*"),
-      ("cells", CellsDir, "cell=*"), ("postings", PostingsDir, "bkt=*"))
-    for ((fam, dirName, glob) <- sidecars) {
-      val idx = new Path(corpusDir, dirName)
-      if (!fs.exists(idx)) out += ((fam, "ok", "sidecar absent"))
+    for (dir <- SidecarDirs) {
+      val idx = new Path(corpusDir, dir)
+      val meta = readMeta(fs, idx)
+      val fam = fromMeta(dir, meta.getOrElse(""))
+      if (!fs.exists(idx)) out += ((fam.name, "ok", "sidecar absent"))
       else {
-        val meta = readIndexMeta(fs, idx)
         val pending = readPendingBackfill(fs, idx)
-        val idxPairs = epochBatchDirs(fs, idx, s"$glob/epoch=*/batch_id=*")
+        val idxPairs = epochBatchDirs(fs, idx, fam.leafGlob)
         val missing = corpusPairs -- idxPairs
         val orphans = idxPairs -- corpusPairs
         val issues = Seq(
@@ -3418,25 +3044,26 @@ object CorpusIngest {
           if (orphans.nonEmpty) Some(s"${orphans.size} orphan index " +
             "partitions for batches the corpus no longer has — swept at the " +
             "next sink start") else None).flatten
-        if (issues.isEmpty) out += ((fam, "ok",
+        if (issues.isEmpty) out += ((fam.name, "ok",
           s"meta '${meta.getOrElse("")}'; ${idxPairs.size} pairs in step"))
-        else out += ((fam, "attention", issues.mkString("; ")))
+        else out += ((fam.name, "attention", issues.mkString("; ")))
       }
-    }
-    val postingsIdx = new Path(corpusDir, PostingsDir)
-    val statsDir = new Path(corpusDir, PostingsStatsDir)
-    if (fs.exists(postingsIdx) || fs.exists(statsDir)) {
-      val statsPairs = epochBatchDirs(fs, statsDir, "epoch=*/batch_id=*")
-      val missingS = corpusPairs -- statsPairs
-      if (!fs.exists(postingsIdx))
-        out += (("postings-stats", "attention",
-          "stats twin present without a postings sidecar — stale leftover; " +
-            "delete it or rebuild postings"))
-      else if (!fs.exists(statsDir) || missingS.nonEmpty)
-        out += (("postings-stats", "attention",
-          s"${missingS.size} corpus partitions missing stats rows — " +
-            "rebuilt at the next exact-sink start (ensurePostingsIndex)"))
-      else out += (("postings-stats", "ok", s"${statsPairs.size} pairs in step"))
+      for (dep <- fam.dependent) {
+        val depDir = dep.path(corpusDir)
+        if (fs.exists(idx) || fs.exists(depDir)) {
+          val depPairs = epochBatchDirs(fs, depDir, dep.leafGlob)
+          val missingD = corpusPairs -- depPairs
+          if (!fs.exists(idx))
+            out += ((dep.name, "attention",
+              s"${dep.label} present without a ${fam.label} — stale leftover; " +
+                s"delete it or rebuild ${fam.name}"))
+          else if (!fs.exists(depDir) || missingD.nonEmpty)
+            out += ((dep.name, "attention",
+              s"${missingD.size} corpus partitions missing ${dep.label} rows — " +
+                s"rebuilt at the next ${fam.name} reconcile (a sink start or build)"))
+          else out += ((dep.name, "ok", s"${depPairs.size} pairs in step"))
+        }
+      }
     }
     out.result().toDF("component", "status", "detail")
   }

@@ -31,8 +31,8 @@ object RaceIngest {
     * SURVEY.md §4). Here each batch writes its own `batch_id=N` partition
     * with dynamic partition overwrite: a replay of batch N overwrites
     * exactly partition N with identical content — idempotent at the sink,
-    * no read-side dedup required. (`readExactlyOnce` remains for sinks that
-    * cannot overwrite.)
+    * no read-side dedup required for replays. (`readExactlyOnce` covers
+    * records the producer resends in a later batch.)
     */
   def startParquetSink(raw: DataFrame, outPath: String, checkpoint: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
@@ -50,13 +50,13 @@ object RaceIngest {
       }
       .start()
 
-  /** Exactly-once read view over the at-least-once sink: the reference
-    * ignores `batchId` and can duplicate rows on replay (spark_ingestion
-    * .py:116–125; SURVEY.md §4 "exactly-once: not achieved"). Because
-    * [[startParquetSink]] stamps every row with its batch id, replayed
-    * batches are identifiable and a keyed read-side dedup (keep the first
-    * batch per natural key) restores exactly-once semantics without
-    * coordinating writers.
+  /** Exactly-once read view over the parquet sink. [[startParquetSink]]
+    * is already idempotent per batch (a replayed batch overwrites its own
+    * `batch_id=N` partition), so this dedup is not for replays: it drops
+    * the same record RESENT by the producer in a later batch, which lands
+    * in a different partition. Every row carries its batch id, so a keyed
+    * read-side dedup (keep the first batch per natural key) serves each
+    * natural key once without coordinating writers.
     */
   def readExactlyOnce(spark: org.apache.spark.sql.SparkSession, path: String,
       naturalKey: Seq[String] = Seq("session_key", "driver_number")): DataFrame =
@@ -88,7 +88,9 @@ object RaceIngest {
   /** S2 — JDBC append sink bridged through foreachBatch (reference:
     * spark_ingestion.py:116–125). Same shape as the reference's
     * `write_to_postgres`; executors open connections, the driver never
-    * funnels rows. Not exercised in tests (no database in the harness).
+    * funnels rows. At-least-once: a replayed batch appends its rows
+    * again (StreamingSpec runs it against embedded Derby and pins that
+    * replay appends).
     */
   def startJdbcSink(raw: DataFrame, jdbcUrl: String, table: String,
       props: java.util.Properties, checkpoint: String,

@@ -2277,6 +2277,28 @@ class StreamingSpec extends SparkSpec {
     assert(statsMarker.exists())
     build()
     assert(!statsMarker.exists() && postingsStats(corpus) === ctlStats)
+
+    // the stats table's written window: rows backfilled, marker not cleared
+    rmRfDir(new java.io.File(corpus, "_graft_postings_stats/epoch=0/batch_id=1"))
+    graft.streaming.CorpusIngest.FaultInjection.arm("backfill-postings-stats-written")
+    val e4 = intercept[RuntimeException] { build() }
+    assert(e4.getMessage.contains("planted fault"), e4.getMessage)
+    assert(statsMarker.exists())
+    build()
+    assert(!statsMarker.exists() && postingsStats(corpus) === ctlStats)
+
+    // adoption window: the whole sidecar vanishes, the rebuild crashes
+    // with the complete index staged in .tmp — never renamed in
+    rmRfDir(new java.io.File(corpus, "_graft_postings"))
+    graft.streaming.CorpusIngest.FaultInjection.arm("adopt-postings-before-rename")
+    val e5 = intercept[RuntimeException] { build() }
+    assert(e5.getMessage.contains("planted fault"), e5.getMessage)
+    assert(!new java.io.File(corpus, "_graft_postings").exists(),
+      "fixture: a crashed adoption must never have renamed a live sidecar in")
+    build()
+    assert(postingsRows(corpus) === ctlRows && postingsStats(corpus) === ctlStats)
+    assert(!new java.io.File(corpus, "_graft_postings.tmp").exists(),
+      "healed adoption must leave no .tmp stage behind")
   }
 
   test("bm25OverCorpus probe is term-bucket-pruned and plans zero corpus-text reads") {

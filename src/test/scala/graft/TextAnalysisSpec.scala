@@ -166,6 +166,15 @@ class TextAnalysisSpec extends SparkSpec {
     assert(a === b)
   }
 
+  test("stopwordRatio refuses an empty stop word instead of diverging from the HOF form") {
+    // size(filter(toks, isin(''))) counts empty edge tokens; the kernel
+    // never matches a zero-length stop word, so the list is refused
+    val e = intercept[IllegalArgumentException] {
+      TextAnalysis.stopwordRatio(col("text"), Seq(""))
+    }
+    assert(e.getMessage.contains("non-empty"), e.getMessage)
+  }
+
   test("wordHits kernel ≡ HOF filter+isin (round-20)") {
     val edges = Seq(
       (0L, "the cat THE the tHe"), (1L, ""), (2L, "   \t "),
