@@ -75,6 +75,21 @@ import graft.functions.{Dedup, NativeExpressions, Similarity, TextAnalysis}
   *    sf1 throughput 840 → 1400 docs/s). These sinks register no
   *    session artifacts, so isolation buys nothing here; keep it ON
   *    only if the hosting session loads per-session artifact jars.
+  *    The 572 → 0 held only for replays of IDENTICAL docs, where every
+  *    batch repeats the warm plan shapes.
+  *
+  * Per-query conf (set by every sink start, not by the deployment):
+  * `spark.sql.codegen.useIdInClassName=false`. A whole-stage class is
+  * otherwise named `GeneratedIteratorForCodegenStage<N>`, where `N` is
+  * the stage's position in the action's plan; a batch is one DAG cut
+  * by collects and local checkpoints whose shape follows the data
+  * (empty probes, IN-list sizes), so `N` shifts between batches and
+  * the same pipeline code misses the cache under a new name — with a
+  * miss per classloader (driver thread and task threads differ).
+  * Measured on the sf0.1 curation replay with different docs than the
+  * warm-up: 104/84 compiles per batch → 9/1. The stream captures the
+  * value at `start()`; the caller's session keeps its own (see
+  * [[withStartConfs]]).
   */
 object CorpusIngest {
 
@@ -136,15 +151,37 @@ object CorpusIngest {
           s"set — unset it or set it to $RocksDbProvider")
     }
 
-  /** Set-provider → start → restore windows of concurrent
-    * [[startDedupedCorpusSink]] calls must not interleave (the started
-    * stream captures the session conf as of `start()`). Serialized on
-    * this JVM-wide lock; see the scaladoc note on `startDedupedCorpusSink`
-    * for the residual caveat about NON-graft queries started in the
-    * window (a per-query conf needs `cloneSession`, which Spark does not
-    * expose publicly).
+  private val StageIdInClassNameKey = "spark.sql.codegen.useIdInClassName"
+
+  /** Set → start → restore windows of concurrent corpus-sink starts
+    * must not interleave (the started stream captures the session conf
+    * as of `start()`). Serialized on this JVM-wide lock; see the
+    * scaladoc note on `startDedupedCorpusSink` for the residual caveat
+    * about NON-graft queries started in the window (a per-query conf
+    * needs `cloneSession`, which Spark does not expose publicly).
     */
-  private val providerFlipLock = new Object
+  private val startConfLock = new Object
+
+  /** Runs a sink's start window with the stream's confs set in the
+    * caller's session, restoring the caller's explicit values (or their
+    * absence) afterwards, also when `start` throws: stage-id-free
+    * generated class names (see the class scaladoc), and with `rocksDb`
+    * the RocksDB state-store provider [[ensureRocksDb]] admits — whose
+    * refusal throws before anything is flipped.
+    */
+  private def withStartConfs[T](spark: SparkSession, rocksDb: Boolean = false)(start: => T): T =
+    startConfLock.synchronized {
+      val keys = StageIdInClassNameKey +: (if (rocksDb) Seq(ProviderKey) else Nil)
+      val prior = keys.map(k => k -> spark.conf.getAll.get(k))
+      if (rocksDb) ensureRocksDb(spark)
+      try {
+        spark.conf.set(StageIdInClassNameKey, "false")
+        start
+      } finally prior.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
 
   private def fsFor(spark: SparkSession, path: String): (FileSystem, Path) = {
     val p = new Path(path)
@@ -1070,7 +1107,7 @@ object CorpusIngest {
     ensure(docs.sparkSession, corpusPath, fam,
       () => rebandStaleBatches(docs.sparkSession, corpusPath, k, bands, shingleN))
     val benchGrams = benchGramSet(benchmark, benchTextCol, benchGramN)
-    val q = docs.writeStream
+    val writer = docs.writeStream
       .outputMode("append")
       .trigger(trigger)
       .option("checkpointLocation", checkpoint)
@@ -1102,7 +1139,7 @@ object CorpusIngest {
         Dedup.freeLocalCheckpoint(keepers)
         ()
       }
-      .start()
+    val q = withStartConfs(docs.sparkSession)(writer.start())
     unpersistOnTermination(docs.sparkSession, q, benchGrams.toSeq)
   }
 
@@ -1203,7 +1240,7 @@ object CorpusIngest {
     val fam = winnowSidecar(k, w, prefixLen)
     ensure(docs.sparkSession, corpusPath, fam)
     val benchGrams = benchGramSet(benchmark, benchTextCol, benchGramN)
-    val q = docs.writeStream
+    val writer = docs.writeStream
       .outputMode("append")
       .trigger(trigger)
       .option("checkpointLocation", checkpoint)
@@ -1263,7 +1300,7 @@ object CorpusIngest {
         Dedup.freeLocalCheckpoint(gated)
         ()
       }
-      .start()
+    val q = withStartConfs(docs.sparkSession)(writer.start())
     unpersistOnTermination(docs.sparkSession, q, benchGrams.toSeq)
   }
 
@@ -1422,7 +1459,7 @@ object CorpusIngest {
     // same gate, same position as the near-dup sink: a contaminated doc
     // is dropped before cell assignment, so it neither probes nor lands
     val benchGrams = benchGramSet(benchmark, benchTextCol, benchGramN)
-    val q = docs.writeStream
+    val writer = docs.writeStream
       .outputMode("append")
       .trigger(trigger)
       .option("checkpointLocation", checkpoint)
@@ -1480,7 +1517,7 @@ object CorpusIngest {
         assigned.unpersist(false)
         ()
       }
-      .start()
+    val q = withStartConfs(docs.sparkSession)(writer.start())
     unpersistOnTermination(docs.sparkSession, q, benchGrams.toSeq)
   }
 
@@ -1623,15 +1660,17 @@ object CorpusIngest {
   /** Start the deduped-corpus sink. `docs` must carry `doc_id` and
     * `text`; rows under `minTokens` are dropped by the quality gate.
     *
-    * Conf-flip caveat: the RocksDB provider conf must read RocksDB when
-    * THIS query starts (the stream captures its own session-conf copy at
-    * `start()`), so the session value is set before and restored right
-    * after, under [[providerFlipLock]] — concurrent corpus-sink starts
-    * serialize and never see each other's flip. A NON-graft streaming
-    * query started concurrently inside that window from another thread
-    * still captures the flipped value (Spark exposes no public per-query
-    * conf or `cloneSession`); if that query carries an HDFS-format state
-    * checkpoint, start it outside a corpus-sink start window.
+    * Conf-flip caveat: the RocksDB provider conf (and the stage-id-free
+    * class names every corpus sink runs with) must be set when THIS
+    * query starts (the stream captures its own session-conf copy at
+    * `start()`), so the session values are set before and restored
+    * right after, under [[startConfLock]] — concurrent corpus-sink
+    * starts serialize and never see each other's flip. A NON-graft
+    * streaming query started concurrently inside that window from
+    * another thread still captures the flipped values (Spark exposes no
+    * public per-query conf or `cloneSession`); if that query carries an
+    * HDFS-format state checkpoint, start it outside a corpus-sink start
+    * window.
     */
   def startDedupedCorpusSink(docs: DataFrame, corpusPath: String,
       checkpoint: String, minTokens: Int = 1,
@@ -1688,9 +1727,7 @@ object CorpusIngest {
     val keepers = gated.groupByKey(_.content_hash)
       .transformWithState(new SeenHashProcessor,
         TimeMode.None(), OutputMode.Append(), initialSeen(spark, corpusPath))
-    providerFlipLock.synchronized {
-      val prior = spark.conf.getAll.get(ProviderKey)
-      ensureRocksDb(spark)
+    withStartConfs(spark, rocksDb = true) {
       // both query-lifetime caches are built AFTER the provider check
       // and inside the catch — a refused or failed start must not leave
       // a persisted gram set (or foreign-hash frame) behind
@@ -1739,9 +1776,6 @@ object CorpusIngest {
         case t: Throwable =>
           cached.foreach(_.unpersist(false))
           throw t
-      } finally prior match {
-        case Some(v) => spark.conf.set(ProviderKey, v)
-        case None => spark.conf.unset(ProviderKey)
       }
     }
   }
@@ -1902,9 +1936,7 @@ object CorpusIngest {
     val exactKeepers = gatedQ.groupByKey(_.content_hash)
       .transformWithState(new SeenCurationHashProcessor,
         TimeMode.None(), OutputMode.Append(), initialSeen(spark, corpusPath))
-    providerFlipLock.synchronized {
-      val prior = spark.conf.getAll.get(ProviderKey)
-      ensureRocksDb(spark)
+    withStartConfs(spark, rocksDb = true) {
       var cached: Seq[DataFrame] = Nil
       try {
         val benchGrams = StageClock.time("start")(
@@ -1930,9 +1962,6 @@ object CorpusIngest {
         case t: Throwable =>
           cached.foreach(_.unpersist(false))
           throw t
-      } finally prior match {
-        case Some(v) => spark.conf.set(ProviderKey, v)
-        case None => spark.conf.unset(ProviderKey)
       }
     }
   }

@@ -36,6 +36,15 @@ class BenchSpec extends AnyFunSuite {
       "the sf1 tripwire covers the top-20 headline queries (round 17)")
   }
 
+  test("SPARK_GRAFT_CPUS must be a positive integer, and the refusal names it") {
+    assert(Bench.cpusSetting(None) == "32")
+    assert(Bench.cpusSetting(Some(" 8 ")) == "8")
+    Seq("", "eight", "0", "-4", "8x", "4.0").foreach { bad =>
+      val e = intercept[IllegalArgumentException](Bench.cpusSetting(Some(bad)))
+      assert(e.getMessage.contains("SPARK_GRAFT_CPUS"), e.getMessage)
+    }
+  }
+
   test("the streaming floor pin is positive when present") {
     assert(Bench.curationSinkFloorSec.forall(_ > 0))
   }

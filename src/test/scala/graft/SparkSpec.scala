@@ -19,6 +19,12 @@ trait SparkSpec extends AnyFunSuite {
     // bypass-merge writer's per-reducer file churn dominates tiny-data
     // exchanges (Bench.scala's round-15 measurement; same rationale)
     .config("spark.shuffle.sort.bypassMergeThreshold", "0")
+    // graft.Bench's codegen deployment confs (its round-17 comments):
+    // without them StreamingSpec's compile-stability case measured ~300
+    // compiles for the warm-up and the replay alike, so it could not
+    // see what the sinks do
+    .config("spark.sql.codegen.cache.maxEntries", "1000")
+    .config("spark.sql.artifact.isolation.enabled", "false")
     .config("spark.sql.warehouse.dir",
       java.nio.file.Files.createTempDirectory("graft-wh").toString)
     // keeper-identity gate for the chmod-free bench filesystem

@@ -3335,6 +3335,88 @@ class StreamingSpec extends SparkSpec {
     assert(after === before, "lost-checkpoint replay changed the corpus")
   }
 
+  test("curation sink compiles stably: a replay of docs unlike the warm-up's hits the codegen cache") {
+    // Whole-stage classes named by plan position (GeneratedIterator-
+    // ForCodegenStage<N>) recompile whenever a batch's data shifts the
+    // stage ids (other probe and anti-join row counts, other batch
+    // sizes), so a replay of DIFFERENT docs than the warm-up recompiled
+    // most fragments. The sinks start with stage-id-free class names.
+    // The JVM-wide compile counter over the second replay pins it; run
+    // alone, that replay compiled 260-262 classes with stage ids in the
+    // names and 36 without. Needs SparkSpec's deployment codegen confs
+    // (1000-entry cache, no artifact isolation).
+    implicit val ctx = spark.sqlContext
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val cents = curCents.toDF("cell_id", "centroid")
+    def replay(batches: Seq[Seq[(Long, String, Seq[Double])]]): Long = {
+      val (corpus, cp) = (tmpDir("stable-corpus"), tmpDir("stable-cp"))
+      val ms = MemoryStream[(Long, String, Seq[Double])]
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      batches.foreach { b =>
+        ms.addData(b)
+        graft.streaming.CorpusIngest.startCurationSink(
+          ms.toDF().toDF("doc_id", "text", "embedding"), corpus, cp, cents)
+          .awaitTermination()
+      }
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+    }
+    def e(c: Int): Seq[Double] = Seq.tabulate(4)(i => if (i == c) 1.0 else 0.0)
+    val warm = replay(Seq(
+      Seq((1L, curText("kilo"), e(0)), (2L, curText("lima"), e(1))),
+      Seq((3L, curText("mike"), e(2)))))
+    val replayed = replay(Seq(
+      (0L until 20L).map(i => (i, curText(s"big${i}x"), e(i.toInt % 4))),
+      (20L until 40L).map(i => (i, curText(s"big${i}y"), e(i.toInt % 4)))))
+    assert(replayed <= 60L,
+      s"a replay of new docs recompiled $replayed classes (warm-up compiled $warm)")
+  }
+
+  test("corpus sink starts leave the caller's codegen and provider confs as they were") {
+    implicit val ctx = spark.sqlContext
+    val idKey = "spark.sql.codegen.useIdInClassName"
+    val provKey = "spark.sql.streaming.stateStore.providerClass"
+    val hdfs = "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
+    def explicit(): (Option[String], Option[String]) =
+      (spark.conf.getAll.get(idKey), spark.conf.getAll.get(provKey))
+    assert(explicit() === ((None, None)), "fixture: confs unexpectedly set")
+    def start(): Unit = {
+      val ms = MemoryStream[(Long, String)]
+      ms.addData((1L, curText("sierra")))
+      graft.streaming.CorpusIngest.startDedupedCorpusSink(
+        ms.toDF().toDF("doc_id", "text"), tmpDir("hyg-corpus"), tmpDir("hyg-cp"))
+        .awaitTermination()
+    }
+    def refused(): Unit = {
+      val err = intercept[IllegalStateException](start())
+      assert(err.getMessage.contains("explicitly"))
+    }
+    try {
+      // unset stays unset, after a successful and after a refused start
+      start()
+      assert(explicit() === ((None, None)))
+      spark.conf.set(provKey, hdfs)
+      refused()
+      assert(explicit() === ((None, Some(hdfs))))
+      // an explicit user value survives both
+      spark.conf.set(idKey, "true")
+      refused()
+      assert(explicit() === ((Some("true"), Some(hdfs))))
+      spark.conf.unset(provKey)
+      start()
+      assert(explicit() === ((Some("true"), None)))
+      // the non-RocksDB sinks restore the same way
+      val ms = MemoryStream[(Long, String)]
+      ms.addData((1L, curText("tango")))
+      graft.streaming.CorpusIngest.startNearDupCorpusSink(
+        ms.toDF().toDF("doc_id", "text"), tmpDir("hyg-nd-corpus"), tmpDir("hyg-nd-cp"))
+        .awaitTermination()
+      assert(explicit() === ((Some("true"), None)))
+    } finally {
+      spark.conf.unset(idKey)
+      spark.conf.unset(provKey)
+    }
+  }
+
   test("curation sink composed probes are bucket/cell-pruned: probe bytes do NOT grow with corpus elsewhere") {
     // The per-family pruning proofs, applied to the COMPOSED per-batch
     // body (curationBatch — exactly the sink's foreachBatch): probe a
