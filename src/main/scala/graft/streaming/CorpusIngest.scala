@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, KeyValueGroupedDataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, KeyValueGroupedDataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessorWithInitialState, StreamingQuery, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
 import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType, StringType, StructField, StructType}
@@ -98,6 +98,10 @@ object CorpusIngest {
     * md5-of-normalized-text `content_hash` every dedup op here keys on).
     */
   case class CorpusDoc(doc_id: Long, text: String, content_hash: String)
+    extends HashedDoc
+
+  /** A row of an exact-dedup stage: the fields [[SeenHashProcessor]] reads. */
+  sealed trait HashedDoc { def doc_id: Long; def content_hash: String }
 
   /** Initial-state row: a hash already in the on-disk corpus. */
   case class SeenHash(content_hash: String)
@@ -106,18 +110,20 @@ object CorpusIngest {
     * smallest-id doc and marks the hash seen; every later occurrence
     * (same batch handled by the grouped iterator, later batches by the
     * state probe) emits nothing. Initial state marks corpus-resident
-    * hashes seen without emitting.
+    * hashes seen without emitting. One Boolean ValueState per hash, for
+    * the exact sink's [[CorpusDoc]] and the curation sink's
+    * [[CurationDoc]] alike.
     */
-  class SeenHashProcessor
-      extends StatefulProcessorWithInitialState[String, CorpusDoc, CorpusDoc, SeenHash] {
+  class SeenHashProcessor[D <: HashedDoc]
+      extends StatefulProcessorWithInitialState[String, D, D, SeenHash] {
     @transient private var seen: ValueState[Boolean] = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
       seen = getHandle.getValueState[Boolean](
         "seen", Encoders.scalaBoolean, TTLConfig.NONE)
 
-    override def handleInputRows(hash: String, rows: Iterator[CorpusDoc],
-        timerValues: TimerValues): Iterator[CorpusDoc] =
+    override def handleInputRows(hash: String, rows: Iterator[D],
+        timerValues: TimerValues): Iterator[D] =
       if (seen.exists()) Iterator.empty
       else {
         seen.update(true)
@@ -289,6 +295,19 @@ object CorpusIngest {
       else spark.read.parquet(corpusPath)
         .select(col("content_hash")).distinct().as[SeenHash]
     seen.groupByKey(_.content_hash)
+  }
+
+  /** The exact stage of the exact and curation sinks: each content hash
+    * passes once, as its smallest-id doc, against the streaming seen-state
+    * ([[SeenHashProcessor]]) bootstrapped by [[initialSeen]].
+    */
+  private def seenFirst[D <: HashedDoc: Encoder](spark: SparkSession,
+      corpusPath: String, docs: Dataset[D]): DataFrame = {
+    import spark.implicits._
+    docs.groupByKey(_.content_hash)
+      .transformWithState(new SeenHashProcessor[D],
+        TimeMode.None(), OutputMode.Append(), initialSeen(spark, corpusPath))
+      .toDF()
   }
 
   // ------------------------------------------------------ epoch claims
@@ -565,7 +584,9 @@ object CorpusIngest {
     query
   }
 
-  /** Both sinks persist a FIXED corpus schema (`doc_id: long`, `text`,
+  /** Every sink reads a STREAMING frame — a batch frame is refused here,
+    * before any epoch claim, checkpoint marker or cache. Every sink
+    * persists a FIXED corpus schema (`doc_id: long`, `text`,
     * plus their dedup columns and the (`epoch`, `batch_id`) partition
     * keys) — extra input columns are
     * NOT carried (join sidecar columns back by `doc_id` downstream), and
@@ -574,6 +595,9 @@ object CorpusIngest {
     */
   private def requireDocSchema(docs: DataFrame): Unit = {
     import org.apache.spark.sql.types._
+    require(docs.isStreaming,
+      "corpus sink input must be a streaming DataFrame (readStream); a batch " +
+        "frame has no micro-batches to ingest")
     require(docs.columns.contains("doc_id") && docs.columns.contains("text"),
       s"corpus sink input needs doc_id and text columns; got ${docs.columns.mkString(", ")}")
     val idType = docs.schema("doc_id").dataType
@@ -687,11 +711,15 @@ object CorpusIngest {
     *  - `rows`: sidecar rows derived from corpus rows that carry their
     *    (epoch, batch_id) columns (adoption, backfill, compaction, erasure);
     *  - `dependent`: a table written after this one and reconciled,
-    *    re-indexed and audited with it.
+    *    re-indexed and audited with it;
+    *  - `beforeAdopt`: run on (session, corpus path) before [[ensure]]
+    *    builds the sidecar from an existing corpus (the band family's
+    *    [[rebandStaleBatches]]).
     */
   private final case class Sidecar(name: String, label: String, dir: String,
       bucket: Option[String], sortKeys: Seq[String], meta: String,
-      rows: DataFrame => DataFrame, dependent: Option[Sidecar] = None) {
+      rows: DataFrame => DataFrame, dependent: Option[Sidecar] = None,
+      beforeAdopt: (SparkSession, String) => Unit = (_, _) => ()) {
     def partCols: Seq[String] = bucket.toSeq ++ Seq("epoch", "batch_id")
     def bucketGlob: Option[String] = bucket.map(b => s"$b=*")
     def leafGlob: String = bucketGlob.fold("")(g => s"$g/") + "epoch=*/batch_id=*"
@@ -738,7 +766,8 @@ object CorpusIngest {
     def p(key: String): Int = metaInt(meta, key)
     dir match {
       case BandsDir => Sidecar("bands", "band index", dir, Some("pfx"),
-        Seq("bh", "band"), meta, bandIndexRows(_, p("bands"), p("prefixLen")))
+        Seq("bh", "band"), meta, bandIndexRows(_, p("bands"), p("prefixLen")),
+        beforeAdopt = rebandStaleBatches(_, _, p("k"), p("bands"), p("shingleN")))
       case WinnowDir => Sidecar("winnow", "winnow index", dir, Some("pfx"),
         Seq("fp_hash", "doc_id"), meta,
         winnowIndexRows(_, p("k"), p("w"), p("prefixLen")))
@@ -790,7 +819,7 @@ object CorpusIngest {
     * sink start and by the batch `build*Index` entries:
     *  - no corpus data yet → create the directory and pin the meta;
     *  - corpus data but no sidecar (an existing corpus being adopted)
-    *    → run `beforeAdopt` (band adoption's [[rebandStaleBatches]]),
+    *    → run the family's `beforeAdopt` hook,
     *    build the whole sidecar from stored corpus rows into
     *    `<dir>.tmp`, pin it there and rename it in, so a crash mid-build
     *    never leaves a partial sidecar that later batches would trust (a
@@ -803,8 +832,7 @@ object CorpusIngest {
     *  - sidecar present and matching → [[reconcile]] it and its
     *    dependents.
     */
-  private def ensure(spark: SparkSession, corpusPath: String, fam: Sidecar,
-      beforeAdopt: () => Unit = () => ()): Unit = {
+  private def ensure(spark: SparkSession, corpusPath: String, fam: Sidecar): Unit = {
     val (fs, corpusDir) = fsFor(spark, corpusPath)
     val idx = fam.path(corpusDir)
     if (fs.exists(idx)) {
@@ -816,7 +844,7 @@ object CorpusIngest {
           "directory to trigger a rebuild")
       fam.tables.foreach(reconcile(spark, corpusPath, _))
     } else if (hasData(fs, corpusDir)) {
-      beforeAdopt()
+      fam.beforeAdopt(spark, corpusPath)
       val tmp = new Path(corpusDir, fam.dir + ".tmp")
       fs.delete(tmp, true)
       clusterForWrite(fam.rows(spark.read.parquet(corpusPath)), fam.partCols, Nil)
@@ -1044,6 +1072,179 @@ object CorpusIngest {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
+  // ------------------------------------------------ corpus-sink pipeline
+
+  /** What a corpus sink's micro-batches read for the life of one query:
+    * the pinned epoch and the query-lifetime caches (the benchmark gram
+    * set; for exact seen-state, the resume-time foreign-epoch hashes).
+    */
+  private final case class SinkRun(corpusPath: String, epoch: Long,
+      foreignHashes: Option[DataFrame], benchGrams: Option[DataFrame],
+      benchGramN: Int) {
+    /** A batch's docs minus foreign-epoch hashes and contaminated docs —
+      * both after the exact stage, so a dropped doc still claims its
+      * hash (see [[foreignEpochHashes]] and the exact sink's scaladoc).
+      */
+    def landed(batch: DataFrame): DataFrame =
+      contaminationGate(foreignHashes.fold(batch)(fh =>
+        batch.join(fh, Seq("content_hash"), "left_anti")), benchGrams, benchGramN)
+  }
+
+  /** One micro-batch as its probe stages see it. Every frame a stage
+    * persists or checkpoints goes on `release` the moment it exists;
+    * [[probeBatch]] runs them all in registration order on the way out,
+    * so a batch that fails mid-probe (or at a planted window) does not
+    * leak resident RDDs until session end.
+    */
+  private final class Batch(val spark: SparkSession, val corpusPath: String,
+      val epoch: Long, val batchId: Long) {
+    private val frees = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
+    def release(free: => Unit): Unit = frees += (() => free)
+    /** Runs every release; one that throws does not block the rest. */
+    def releaseAll(): Unit = frees.foreach(f => try f() catch { case _: Exception => () })
+  }
+
+  /** One probe family's per-batch drop stage, defined once beside its
+    * [[Sidecar]] entry ([[bandStage]], [[winnowStage]], [[cellStage]])
+    * and run by [[probeBatch]] for every probing sink:
+    *  - `clock`: the [[StageClock]] label its probe bills (and the final
+    *    keeper cut, when the stage is last and leaves it lazy);
+    *  - `window`: the stem of its `curation-after-<window>-write` window;
+    *  - `probe`: over the previous stage's survivors, this stage's
+    *    survivors and the sidecar rows of the batch's final keepers.
+    */
+  private final case class Stage(sidecar: Sidecar, clock: String, window: String,
+      probe: (Batch, DataFrame) => (DataFrame, DataFrame => DataFrame))
+
+  /** Distinct values of a one-column frame — the metadata-sized driver
+    * collect (band/fingerprint prefixes, cell ids) that prunes a probe.
+    */
+  private def distinctKeys[T](keys: DataFrame, enc: Encoder[T]): Seq[T] =
+    keys.distinct().as[T](enc).collect().toSeq
+
+  /** One micro-batch of a probing sink, every stage seeing only the
+    * previous stage's survivors:
+    *  1. the landed docs ([[SinkRun.landed]]), cut once (billed "gate");
+    *  2. each stage's probe;
+    *  3. the final keepers cut once — a stage that ends in a checkpoint
+    *     (the band stage's eager probe) already is one;
+    *  4. the corpus partition, then each stage's sidecar partition in
+    *     stage order, with dynamic overwrite (billed "write"). A window
+    *     follows each write: `curation-after-corpus-write`, then
+    *     `curation-after-<window>-write` — the writes are not atomic
+    *     against the corpus nor among themselves, and an uncommitted
+    *     batch re-fires on restart and rewrites every partition.
+    */
+  private def probeBatch(batch: DataFrame, batchId: Long, run: SinkRun,
+      stages: Seq[Stage]): Unit = {
+    val b = new Batch(batch.sparkSession, run.corpusPath, run.epoch, batchId)
+    try {
+      val gated = StageClock.time("gate")(run.landed(batch).localCheckpoint(true))
+      b.release(Dedup.freeLocalCheckpoint(gated))
+      val (survivors, rows) = stages.foldLeft((gated, Vector.empty[DataFrame => DataFrame])) {
+        case ((in, rs), s) =>
+          val (kept, r) = s.probe(b, in)
+          (kept, rs :+ r)
+      }
+      val keepers = survivors.queryExecution.logical match {
+        case _: org.apache.spark.sql.execution.LogicalRDD => survivors
+        case _ =>
+          val cut = StageClock.time(stages.last.clock)(survivors.localCheckpoint(true))
+          b.release(Dedup.freeLocalCheckpoint(cut))
+          cut
+      }
+      StageClock.time("write") {
+        writePartition(keepers, run.corpusPath, None, Seq("doc_id"), run.epoch, batchId)
+        FaultInjection.maybeTrip("curation-after-corpus-write")
+        stages.zip(rows).foreach { case (s, r) =>
+          writeBatch(s.sidecar, run.corpusPath, r(keepers), run.epoch, batchId)
+          FaultInjection.maybeTrip(s"curation-after-${s.window}-write")
+        }
+      }
+    } finally b.releaseAll()
+  }
+
+  /** The one start sequence of every corpus sink:
+    *  1. [[resumePendingErasure]] — an interrupted erasure finishes
+    *     before a reconcile backfill could re-derive sidecar rows from
+    *     still-doomed corpus rows;
+    *  2. with exact seen-state (`rail` names the sink in refusals): the
+    *     erasure rail ([[checkErasureRail]]) — after the resume, so a
+    *     resume that heals an erasure refuses itself;
+    *  3. [[queryEpoch]], then [[ensure]] per sidecar table;
+    *  4. with exact seen-state on a fresh checkpoint: pin what the
+    *     initial-state bootstrap is about to absorb — every (epoch,
+    *     batch_id) partition with data right now. A partition landing
+    *     before the first batch's bootstrap read is at worst
+    *     under-recorded, and a later resume re-folds it (idempotent);
+    *  5. `stream`, built now, after any adoption rewrote the corpus;
+    *  6. under [[withStartConfs]]: the query-lifetime caches, built
+    *     inside the try so a refused or failed start unpersists them,
+    *     then `foreachBatch(batch)` and `start()`;
+    *  7. [[unpersistOnTermination]].
+    * Billed to [[StageClock]] as "start" (not floor-pinned): the sf1
+    * floors showed the curation capstone is RESTART-overhead-bound, so
+    * the per-start reconcile work needs its own visible share in every
+    * replay's stage_sec.
+    */
+  private def startCorpusSink(spark: SparkSession, corpusPath: String,
+      checkpoint: String, tables: Seq[Sidecar], rail: Option[String],
+      benchmark: Option[DataFrame], benchTextCol: String, benchGramN: Int,
+      trigger: Trigger)(stream: => DataFrame)(
+      batch: (SinkRun, DataFrame, Long) => Unit): StreamingQuery = {
+    val cp = new Path(checkpoint)
+    val cpFs = cp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (epoch, docs) = StageClock.time("start") {
+      resumePendingErasure(spark, corpusPath)
+      val fresh = pinnedEpoch(cpFs, cp).isEmpty
+      rail.foreach(checkErasureRail(spark, corpusPath, cpFs, cp, fresh, _))
+      val e = queryEpoch(spark, corpusPath, checkpoint)
+      tables.foreach(ensure(spark, corpusPath, _))
+      if (rail.isDefined && fresh) {
+        val (corpusFs, corpusDir) = fsFor(spark, corpusPath)
+        writeAbsorbed(cpFs, cp,
+          epochBatchDirs(corpusFs, corpusDir, "epoch=*/batch_id=*"))
+      }
+      (e, stream)
+    }
+    withStartConfs(spark, rocksDb = rail.isDefined) {
+      var cached: Seq[DataFrame] = Nil
+      try {
+        val q = StageClock.time("start") {
+          val benchGrams = benchGramSet(benchmark, benchTextCol, benchGramN)
+          cached = benchGrams.toSeq
+          val foreignHashes =
+            if (rail.isEmpty) None
+            else foreignEpochHashes(spark, corpusPath, checkpoint, epoch)
+          cached = cached ++ foreignHashes
+          val run = SinkRun(corpusPath, epoch, foreignHashes, benchGrams, benchGramN)
+          docs.writeStream
+            .outputMode("append")
+            .trigger(trigger)
+            .option("checkpointLocation", checkpoint)
+            .foreachBatch((b: DataFrame, batchId: Long) => batch(run, b, batchId))
+            .start()
+        }
+        unpersistOnTermination(spark, q, cached)
+      } catch {
+        case t: Throwable =>
+          cached.foreach(_.unpersist(false))
+          throw t
+      }
+    }
+  }
+
+  /** [[startCorpusSink]] with [[probeBatch]] over `stages` as the batch
+    * body and the stages' sidecars as the ensured tables.
+    */
+  private def startProbingSink(spark: SparkSession, corpusPath: String,
+      checkpoint: String, stages: Seq[Stage], rail: Option[String],
+      benchmark: Option[DataFrame], benchTextCol: String, benchGramN: Int,
+      trigger: Trigger)(stream: => DataFrame): StreamingQuery =
+    startCorpusSink(spark, corpusPath, checkpoint, stages.map(_.sidecar), rail,
+      benchmark, benchTextCol, benchGramN, trigger)(stream)(
+      (run, batch, batchId) => probeBatch(batch, batchId, run, stages))
+
   /** The per-batch probe side: stored band rows from buckets matching
     * the batch's own prefixes, minus the batch's own (epoch, batch_id)
     * partition (an intact-checkpoint REPLAY must not probe against the
@@ -1059,6 +1260,29 @@ object CorpusIngest {
       .filter(col("pfx").isin(pfxs: _*) &&
         !(col("epoch") === lit(epoch) && col("batch_id") === lit(batchId)))
       .select(col("band"), col("bh"))
+
+  /** The band family's drop stage ([[Dedup.incrementalNearDupFromSig]],
+    * the oracle-checked qd37 probe): signatures once (persisted), then
+    * the batch's band prefixes — ≤16^prefixLen distinct single-chunk
+    * strings, a metadata-sized driver collect — prune the probe to the
+    * matching `pfx=` buckets. A doc band-matching the corpus or a
+    * smaller-id batch doc is dropped; survivors come back checkpointed
+    * with their `band0..` columns, which the corpus stores and the
+    * sidecar rows explode.
+    */
+  private def bandStage(k: Int, bands: Int, shingleN: Int, prefixLen: Int): Stage =
+    Stage(bandsSidecar(k, bands, shingleN, prefixLen), "band", "band", { (b, in) =>
+      val kept = StageClock.time("band") {
+        val sig = Dedup.lshSignature(in, "text", k, bands, shingleN)
+        val pfxs = distinctKeys(sig.select(explode(array((0 until bands).map(i =>
+          substring(col(s"band$i"), 1, prefixLen)): _*)).as("p")), Encoders.STRING)
+        Dedup.incrementalNearDupFromSig(sig,
+          probeBands(b.spark, b.corpusPath, b.epoch, b.batchId, pfxs), "doc_id", bands)
+      }
+      b.release(Dedup.freeLocalCheckpoint(kept))
+      (kept, keepers => Dedup.bandsLong(keepers, bands, Nil)
+        .withColumn("pfx", substring(col("bh"), 1, prefixLen)))
+    })
 
   /** Start the NEAR-dup-deduped corpus sink — the fuzzy form of
     * [[startDedupedCorpusSink]]: a batch doc is dropped when it LSH
@@ -1099,51 +1323,12 @@ object CorpusIngest {
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     requireDocSchema(docs)
     require(prefixLen >= 1 && prefixLen <= 8, s"prefixLen must be in [1,8], got $prefixLen")
-    // an interrupted erasure must finish before the ensure step's
-    // backfill can re-derive sidecar rows from still-doomed corpus rows
-    resumePendingErasure(docs.sparkSession, corpusPath)
-    val epoch = queryEpoch(docs.sparkSession, corpusPath, checkpoint)
-    val fam = bandsSidecar(k, bands, shingleN, prefixLen)
-    ensure(docs.sparkSession, corpusPath, fam,
-      () => rebandStaleBatches(docs.sparkSession, corpusPath, k, bands, shingleN))
-    val benchGrams = benchGramSet(benchmark, benchTextCol, benchGramN)
-    val writer = docs.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        import spark.implicits._
-        val gated = contaminationGate(
-          batch
-            .filter(TextAnalysis.tokenCount(col("text")) >= minTokens)
-            .select(col("doc_id").cast("long").as("doc_id"), col("text")),
-          benchGrams, benchGramN)
-        // signatures once (persisted), THEN the prefix set — ≤16^prefixLen
-        // distinct single-chunk strings, a metadata-sized driver collect
-        val sig = Dedup.lshSignature(gated, "text", k, bands, shingleN)
-        val pfxs = sig.select(explode(array((0 until bands).map(b =>
-            substring(col(s"band$b"), 1, prefixLen)): _*)).as("p"))
-          .distinct().as[String].collect().toSeq
-        val keepers = Dedup.incrementalNearDupFromSig(sig,
-            probeBands(spark, corpusPath, epoch, batchId, pfxs),
-            "doc_id", bands)
-        writePartition(keepers, corpusPath, None, Seq("doc_id"), epoch, batchId)
-        writeBatch(fam, corpusPath,
-          Dedup.bandsLong(keepers, bands, Nil)
-            .withColumn("pfx", substring(col("bh"), 1, prefixLen)),
-          epoch, batchId)
-        // keepers is localCheckpoint'ed (incrementalNearDupFromSig's
-        // eager materialization); both writes are done — free its
-        // blocks or every batch leaks one resident RDD
-        Dedup.freeLocalCheckpoint(keepers)
-        ()
-      }
-    val q = withStartConfs(docs.sparkSession)(writer.start())
-    unpersistOnTermination(docs.sparkSession, q, benchGrams.toSeq)
+    startProbingSink(docs.sparkSession, corpusPath, checkpoint,
+      Seq(bandStage(k, bands, shingleN, prefixLen)), None,
+      benchmark, benchTextCol, benchGramN, trigger)(
+      docs.filter(TextAnalysis.tokenCount(col("text")) >= minTokens)
+        .select(col("doc_id").cast("long").as("doc_id"), col("text")))
   }
-
-  // ---------------------------------------------- semantic (SemDeDup) sink
 
   // ------------------------------------- winnowing (containment) sink
 
@@ -1200,6 +1385,59 @@ object CorpusIngest {
         !(col("epoch") === lit(epoch) && col("batch_id") === lit(batchId)))
       .select(col("doc_id").as("__cid"), col("fp_hash"))
 
+  /** The winnow family's drop stage (the qd53 candidate rule): a doc
+    * sharing ≥ `minShared` fingerprints with one stored doc, or with a
+    * smaller-id batch doc, is dropped; fingerprints carried by more than
+    * `maxDf` docs (stored + batch) are boilerplate and excluded first.
+    * A probed fingerprint's document frequency is complete within the
+    * probe result (one fingerprint, one bucket), so the cap needs no
+    * second corpus pass. Survivors stay lazy.
+    */
+  private def winnowStage(k: Int, w: Int, minShared: Int, maxDf: Int,
+      prefixLen: Int): Stage =
+    Stage(winnowSidecar(k, w, prefixLen), "winnow", "winnow", { (b, in) =>
+      // per-doc distinct fingerprint hashes, persisted: the prefix
+      // collect, the cross-corpus probe, the within-batch self-join
+      // and the sidecar rows all consume this frame
+      val fps = Dedup.winnowFingerprints(in.select(col("doc_id"), col("text")),
+          "doc_id", "text", k, w)
+        .select(col("doc_id"), col("fp_hash")).distinct()
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      b.release(fps.unpersist(false))
+      // eager: the probe result feeds TWO branches (the df cap and the
+      // pair join) — checkpointing reads the bucket files exactly once
+      // per batch (and makes the pruning proofs' bytes deterministic)
+      val stored = StageClock.time("winnow") {
+        val pfxs = distinctKeys(
+          fps.select(substring(col("fp_hash"), 1, prefixLen).as("p")), Encoders.STRING)
+        probeWinnow(b.spark, b.corpusPath, b.epoch, b.batchId, pfxs)
+          .localCheckpoint(true)
+      }
+      b.release(Dedup.freeLocalCheckpoint(stored))
+      val hot = fps.select(col("fp_hash"))
+        .union(stored.select(col("fp_hash")))
+        .groupBy(col("fp_hash")).agg(count(lit(1)).as("__df"))
+        .filter(col("__df") > maxDf).select("fp_hash")
+      val bf = fps.join(hot, Seq("fp_hash"), "left_anti")
+      val sf = stored.join(hot, Seq("fp_hash"), "left_anti")
+      val crossHit = bf.join(sf, "fp_hash")
+        .groupBy(col("doc_id"), col("__cid"))
+        .agg(count(lit(1)).as("__n"))
+        .filter(col("__n") >= minShared)
+        .select(col("doc_id")).distinct()
+      val withinHit = bf.select(col("doc_id").as("__ia"), col("fp_hash"))
+        .join(bf.select(col("doc_id").as("__ib"), col("fp_hash")), "fp_hash")
+        .filter(col("__ia") < col("__ib"))
+        .groupBy(col("__ia"), col("__ib"))
+        .agg(count(lit(1)).as("__n"))
+        .filter(col("__n") >= minShared)
+        .select(col("__ib").as("doc_id")).distinct()
+      (in.join(crossHit, Seq("doc_id"), "left_anti")
+          .join(withinHit, Seq("doc_id"), "left_anti"),
+        keepers => keepers.select(col("doc_id")).join(fps, "doc_id")
+          .withColumn("pfx", substring(col("fp_hash"), 1, prefixLen)))
+    })
+
   /** Start the CONTAINMENT-deduped corpus sink — the fourth sink family
     * (exact / near-dup / semantic / containment): a batch doc is
     * dropped when it shares ≥ `minShared` winnowing fingerprints with
@@ -1235,73 +1473,11 @@ object CorpusIngest {
     require(prefixLen >= 1 && prefixLen <= 8, s"prefixLen must be in [1,8], got $prefixLen")
     require(minShared >= 1 && maxDf >= 2,
       s"need minShared >= 1, maxDf >= 2 (got $minShared, $maxDf)")
-    resumePendingErasure(docs.sparkSession, corpusPath)
-    val epoch = queryEpoch(docs.sparkSession, corpusPath, checkpoint)
-    val fam = winnowSidecar(k, w, prefixLen)
-    ensure(docs.sparkSession, corpusPath, fam)
-    val benchGrams = benchGramSet(benchmark, benchTextCol, benchGramN)
-    val writer = docs.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        import spark.implicits._
-        // checkpointed: consumed by the fingerprint derivation AND the
-        // keeper anti-join — without it the source re-reads per consumer
-        val gated = contaminationGate(
-          batch
-            .filter(TextAnalysis.tokenCount(col("text")) >= minTokens)
-            .select(col("doc_id").cast("long").as("doc_id"), col("text")),
-          benchGrams, benchGramN).localCheckpoint(true)
-        // per-doc distinct fingerprint hashes, persisted: the prefix
-        // collect, the cross-corpus probe, the within-batch self-join
-        // and the index write all consume this frame
-        val fps = Dedup.winnowFingerprints(gated, "doc_id", "text", k, w)
-          .select(col("doc_id"), col("fp_hash")).distinct()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val pfxs = fps.select(substring(col("fp_hash"), 1, prefixLen).as("p"))
-          .distinct().as[String].collect().toSeq
-        // eager: the probe result feeds TWO branches (the df cap and the
-        // pair join) — checkpointing reads the bucket files exactly once
-        // per batch (and makes the pruning proof's bytes deterministic)
-        val stored = probeWinnow(spark, corpusPath, epoch, batchId, pfxs)
-          .localCheckpoint(true)
-        val hot = fps.select(col("fp_hash"))
-          .union(stored.select(col("fp_hash")))
-          .groupBy(col("fp_hash")).agg(count(lit(1)).as("__df"))
-          .filter(col("__df") > maxDf).select("fp_hash")
-        val bf = fps.join(hot, Seq("fp_hash"), "left_anti")
-        val sf = stored.join(hot, Seq("fp_hash"), "left_anti")
-        val crossHit = bf.join(sf, "fp_hash")
-          .groupBy(col("doc_id"), col("__cid"))
-          .agg(count(lit(1)).as("__n"))
-          .filter(col("__n") >= minShared)
-          .select(col("doc_id")).distinct()
-        val withinHit = bf.select(col("doc_id").as("__ia"), col("fp_hash"))
-          .join(bf.select(col("doc_id").as("__ib"), col("fp_hash")), "fp_hash")
-          .filter(col("__ia") < col("__ib"))
-          .groupBy(col("__ia"), col("__ib"))
-          .agg(count(lit(1)).as("__n"))
-          .filter(col("__n") >= minShared)
-          .select(col("__ib").as("doc_id")).distinct()
-        val keepers = gated
-          .join(crossHit, Seq("doc_id"), "left_anti")
-          .join(withinHit, Seq("doc_id"), "left_anti")
-          .localCheckpoint(true)
-        writePartition(keepers, corpusPath, None, Seq("doc_id"), epoch, batchId)
-        writeBatch(fam, corpusPath,
-          keepers.select(col("doc_id")).join(fps, "doc_id")
-            .withColumn("pfx", substring(col("fp_hash"), 1, prefixLen)),
-          epoch, batchId)
-        fps.unpersist(false)
-        Dedup.freeLocalCheckpoint(stored)
-        Dedup.freeLocalCheckpoint(keepers)
-        Dedup.freeLocalCheckpoint(gated)
-        ()
-      }
-    val q = withStartConfs(docs.sparkSession)(writer.start())
-    unpersistOnTermination(docs.sparkSession, q, benchGrams.toSeq)
+    startProbingSink(docs.sparkSession, corpusPath, checkpoint,
+      Seq(winnowStage(k, w, minShared, maxDf, prefixLen)), None,
+      benchmark, benchTextCol, benchGramN, trigger)(
+      docs.filter(TextAnalysis.tokenCount(col("text")) >= minTokens)
+        .select(col("doc_id").cast("long").as("doc_id"), col("text")))
   }
 
   /** [[compactNearDupCorpus]] for a CONTAINMENT-sink corpus: candidate
@@ -1386,6 +1562,45 @@ object CorpusIngest {
         !(col("epoch") === lit(epoch) && col("batch_id") === lit(batchId)))
       .select(col("cell"), col("emb").as("__corpus_emb"))
 
+  /** The cell family's drop stage (SemDeDup's same-cell rule, qe10):
+    * assign each doc its nearest pinned centroid (persisted — the cell
+    * collect, both candidate sides and the survivors' anti-join read
+    * it; the collect bills "assign", because as its first action it
+    * also materializes every upstream lazy stage), probe only the
+    * batch's cells, and drop a doc whose pair score with a candidate
+    * reaches `threshold`. ONE candidate side serves both drop arms:
+    * stored vectors carry the sentinel id `Long.MinValue`, below every
+    * real doc_id ([[checkedDocId]] reserves it), and batch vectors their
+    * own id, so the single predicate `__cand_id < doc_id` expresses
+    * both the vs-corpus and the smaller-batchmate rule — one cell
+    * equi-join, one codegen'd fragment, no union of two joins and no
+    * distinct before an anti-join that never needed one.
+    */
+  private def cellStage(cm: Array[Array[Double]], metric: String,
+      threshold: Double): Stage =
+    Stage(cellsSidecar(cm), "cell", "cells", { (b, in) =>
+      val assigned = in
+        .withColumn("cell",
+          element_at(NativeExpressions.nearestCells(col("embedding"), cm, 1), 1))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      b.release(assigned.unpersist(false))
+      val cellsHit = StageClock.time("assign")(
+        distinctKeys(assigned.select("cell"), Encoders.scalaInt))
+      val candidates = probeCells(b.spark, b.corpusPath, b.epoch, b.batchId, cellsHit)
+        .select(col("cell"), lit(Long.MinValue).as("__cand_id"),
+          col("__corpus_emb").as("__cand_emb"))
+        .union(assigned.select(col("cell"), col("doc_id").as("__cand_id"),
+          col("embedding").as("__cand_emb")))
+      val dropped = assigned.select(col("doc_id"), col("cell"), col("embedding"))
+        .join(candidates, "cell")
+        .filter(col("__cand_id") < col("doc_id") &&
+          Similarity.pairScore(metric, col("embedding"), col("__cand_emb"))
+            >= threshold)
+        .select(col("doc_id"))
+      (assigned.join(dropped, Seq("doc_id"), "left_anti"),
+        keepers => keepers.select(col("doc_id"), col("embedding").as("emb"), col("cell")))
+    })
+
   /** Opt-in companion alert stream for [[startSemanticDedupCorpusSink]]:
     * run it over the SAME input frame and the SAME pinned centroids as
     * the sink (a second streaming query — its own checkpoint, its own
@@ -1451,74 +1666,18 @@ object CorpusIngest {
     // nothing; dot products are magnitude-scaled, any finite bound goes
     if (metric == "cosine") require(threshold > 0.0 && threshold <= 1.0,
       s"cosine threshold must be in (0, 1], got $threshold")
-    resumePendingErasure(docs.sparkSession, corpusPath)
-    val epoch = queryEpoch(docs.sparkSession, corpusPath, checkpoint)
-    val cm = Similarity.Ivf.centroidMatrix(centroids)
-    val fam = cellsSidecar(cm)
-    ensure(docs.sparkSession, corpusPath, fam)
-    // same gate, same position as the near-dup sink: a contaminated doc
-    // is dropped before cell assignment, so it neither probes nor lands
-    val benchGrams = benchGramSet(benchmark, benchTextCol, benchGramN)
-    val writer = docs.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val assigned = contaminationGate(
-            batch
-              // null-embedding tolerance (the CentroidDrift monitor's
-              // convention): an unprobeable doc is dropped by the gate —
-              // otherwise its null cell NPEs the driver-side cellsHit
-              // collect and kills the query
-              .filter(TextAnalysis.tokenCount(col("text")) >= minTokens &&
-                col("embedding").isNotNull)
-              .select(checkedDocId(col("doc_id").cast("long")).as("doc_id"),
-                col("text"), col("embedding")),
-            benchGrams, benchGramN)
-          .select(col("doc_id"), col("text"),
-            col("embedding").cast("array<double>").as("emb"))
-          .withColumn("cell",
-            element_at(NativeExpressions.nearestCells(col("emb"), cm, 1), 1))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val cellsHit = assigned.select("cell").distinct()
-          .collect().map(_.getInt(0)).toSeq
-        // one candidate side for both drop arms (curationBatch's
-        // round-15 shape): stored vectors carry a sentinel id below
-        // every real doc_id, so a single cand_id < doc_id ∧ score ≥ τ
-        // predicate expresses both the vs-corpus and the
-        // smaller-batchmate rules — one join instead of two + union +
-        // a distinct the anti-join never needed
-        val dropped = assigned.select(col("doc_id"), col("cell"), col("emb"))
-          .join(
-            probeCells(spark, corpusPath, epoch, batchId, cellsHit)
-              .select(col("cell"), lit(Long.MinValue).as("__cand_id"),
-                col("__corpus_emb").as("__cand_emb"))
-              .union(assigned.select(col("cell"), col("doc_id").as("__cand_id"),
-                col("emb").as("__cand_emb"))), "cell")
-          .filter(col("__cand_id") < col("doc_id") &&
-            Similarity.pairScore(metric, col("emb"), col("__cand_emb"))
-              >= threshold)
-          .select(col("doc_id"))
-        // persisted: BOTH writes below consume keepers — unmaterialized,
-        // each would re-run the probe read, the cosine join, and the
-        // anti-join (the near-dup sink gets the same effect from
-        // incrementalNearDupFromSig's eager checkpoint)
-        val keepers = assigned
-          .join(dropped, Seq("doc_id"), "left_anti")
-          .select(col("doc_id"), col("text"), col("emb").as("embedding"),
-            col("cell"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        writePartition(keepers, corpusPath, None, Seq("doc_id"), epoch, batchId)
-        writeBatch(fam, corpusPath,
-          keepers.select(col("doc_id"), col("embedding").as("emb"), col("cell")),
-          epoch, batchId)
-        keepers.unpersist(false)
-        assigned.unpersist(false)
-        ()
-      }
-    val q = withStartConfs(docs.sparkSession)(writer.start())
-    unpersistOnTermination(docs.sparkSession, q, benchGrams.toSeq)
+    startProbingSink(docs.sparkSession, corpusPath, checkpoint,
+      Seq(cellStage(Similarity.Ivf.centroidMatrix(centroids), metric, threshold)),
+      None, benchmark, benchTextCol, benchGramN, trigger)(
+      docs
+        // null-embedding tolerance (the CentroidDrift monitor's
+        // convention): an unprobeable doc is dropped by the gate —
+        // otherwise its null cell NPEs the driver-side cell collect and
+        // kills the query
+        .filter(TextAnalysis.tokenCount(col("text")) >= minTokens &&
+          col("embedding").isNotNull)
+        .select(checkedDocId(col("doc_id").cast("long")).as("doc_id"),
+          col("text"), col("embedding").cast("array<double>").as("embedding")))
   }
 
   // ---------------------------------------------- BM25 postings sidecar
@@ -1692,90 +1851,41 @@ object CorpusIngest {
             "started with maintainPostings=false — pass maintainPostings=true " +
             "(same bucket count) or delete the sidecar")
     }
-    // finish any interrupted erasure first (it may bump the erasure
-    // epoch), THEN the rail: a resume that heals an erasure must refuse
-    // itself — its seen-state predates the erasure by construction
-    resumePendingErasure(spark, corpusPath)
-    val cp = new Path(checkpoint)
-    val cpFs = cp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val fresh = pinnedEpoch(cpFs, cp).isEmpty
-    checkErasureRail(spark, corpusPath, cpFs, cp, fresh, "exact-dedup sink")
-    val epoch = queryEpoch(spark, corpusPath, checkpoint)
     val postings = postingsSidecar(postingsBuckets)
-    if (maintainPostings) ensure(spark, corpusPath, postings)
-    if (fresh) {
-      // pin what the initial-state bootstrap is about to absorb: every
-      // (epoch, batch_id) partition with data RIGHT NOW. A partition
-      // landing between this snapshot and the first batch's bootstrap
-      // read is at worst under-recorded — a later resume then re-folds
-      // it redundantly (idempotent), never misses it.
-      val (corpusFs, corpusDir) = fsFor(spark, corpusPath)
-      writeAbsorbed(cpFs, cp,
-        epochBatchDirs(corpusFs, corpusDir, "epoch=*/batch_id=*"))
-    }
     // the contamination gate runs in foreachBatch (AFTER the state
     // probe): a contaminated doc claims its hash in state but never
     // lands in the corpus — any later doc with the same hash is a
     // duplicate of a contaminated doc (same normalized text, so the
     // same grams up to case/whitespace) and dropping it too is the
     // gate's intent, not a loss
-    val gated = docs
-      .filter(TextAnalysis.tokenCount(col("text")) >= minTokens)
-      .select(col("doc_id").cast("long").as("doc_id"), col("text"),
-        TextAnalysis.fingerprint(col("text")).as("content_hash"))
-      .as[CorpusDoc]
-    val keepers = gated.groupByKey(_.content_hash)
-      .transformWithState(new SeenHashProcessor,
-        TimeMode.None(), OutputMode.Append(), initialSeen(spark, corpusPath))
-    withStartConfs(spark, rocksDb = true) {
-      // both query-lifetime caches are built AFTER the provider check
-      // and inside the catch — a refused or failed start must not leave
-      // a persisted gram set (or foreign-hash frame) behind
-      var cached: Seq[DataFrame] = Nil
-      try {
-        val benchGrams = benchGramSet(benchmark, benchTextCol, benchGramN)
-        cached = benchGrams.toSeq
-        // resumes fold foreign partitions' hashes (fresh starts get them
-        // all via initial state; foreignEpochHashes subtracts the
-        // absorbed set and the own epoch)
-        val foreignHashes = foreignEpochHashes(spark, corpusPath, checkpoint, epoch)
-        cached = cached ++ foreignHashes
-        val q = keepers.writeStream
-          .outputMode("append")
-          .trigger(trigger)
-          .option("checkpointLocation", checkpoint)
-          .foreachBatch { (batch: Dataset[CorpusDoc], batchId: Long) =>
-            val folded = foreignHashes.fold(batch.toDF())(fh =>
-              batch.toDF().join(fh, Seq("content_hash"), "left_anti"))
-            val landed0 = contaminationGate(folded, benchGrams, benchGramN)
-              .withColumn("epoch", lit(epoch))
-              .withColumn("batch_id", lit(batchId))
-            // three consumers when postings ride along (corpus write,
-            // postings write, stats write) — persist or the gate and
-            // fold joins re-run per write
-            val landed =
-              if (maintainPostings)
-                landed0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-              else landed0
-            writePartition(landed, corpusPath, None, Seq("doc_id"), epoch, batchId)
-            if (maintainPostings) {
-              // same (epoch, batch_id) partition discipline as the
-              // corpus write: an intact-checkpoint replay rewrites the
-              // partitions identically; a crash between the corpus and
-              // sidecar writes re-fires the batch; the double-failure
-              // window heals at next start via the postings reconcile
-              postings.tables.foreach(t =>
-                writeBatch(t, corpusPath, t.rows(landed), epoch, batchId))
-              landed.unpersist(false)
-            }
-            ()
-          }
-          .start()
-        unpersistOnTermination(spark, q, cached)
-      } catch {
-        case t: Throwable =>
-          cached.foreach(_.unpersist(false))
-          throw t
+    startCorpusSink(spark, corpusPath, checkpoint,
+      if (maintainPostings) Seq(postings) else Nil, Some("exact-dedup sink"),
+      benchmark, benchTextCol, benchGramN, trigger)(
+      seenFirst(spark, corpusPath, docs
+        .filter(TextAnalysis.tokenCount(col("text")) >= minTokens)
+        .select(col("doc_id").cast("long").as("doc_id"), col("text"),
+          TextAnalysis.fingerprint(col("text")).as("content_hash"))
+        .as[CorpusDoc])) { (run, batch, batchId) =>
+      val landed0 = run.landed(batch)
+        .withColumn("epoch", lit(run.epoch))
+        .withColumn("batch_id", lit(batchId))
+      // three consumers when postings ride along (corpus write,
+      // postings write, stats write) — persist or the gate and
+      // fold joins re-run per write
+      val landed =
+        if (maintainPostings)
+          landed0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        else landed0
+      writePartition(landed, corpusPath, None, Seq("doc_id"), run.epoch, batchId)
+      if (maintainPostings) {
+        // same (epoch, batch_id) partition discipline as the
+        // corpus write: an intact-checkpoint replay rewrites the
+        // partitions identically; a crash between the corpus and
+        // sidecar writes re-fires the batch; the double-failure
+        // window heals at next start via the postings reconcile
+        postings.tables.foreach(t =>
+          writeBatch(t, corpusPath, t.rows(landed), run.epoch, batchId))
+        landed.unpersist(false)
       }
     }
   }
@@ -1787,32 +1897,7 @@ object CorpusIngest {
     * embedding rides through the exact stage untouched.
     */
   case class CurationDoc(doc_id: Long, text: String,
-      embedding: Seq[Double], content_hash: String)
-
-  /** [[SeenHashProcessor]]'s first-wins exact-dedup logic over
-    * [[CurationDoc]] rows — same state layout (one Boolean ValueState
-    * per content_hash), same initial-state bootstrap type.
-    */
-  class SeenCurationHashProcessor
-      extends StatefulProcessorWithInitialState[String, CurationDoc, CurationDoc, SeenHash] {
-    @transient private var seen: ValueState[Boolean] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      seen = getHandle.getValueState[Boolean](
-        "seen", Encoders.scalaBoolean, TTLConfig.NONE)
-
-    override def handleInputRows(hash: String, rows: Iterator[CurationDoc],
-        timerValues: TimerValues): Iterator[CurationDoc] =
-      if (seen.exists()) Iterator.empty
-      else {
-        seen.update(true)
-        Iterator.single(rows.minBy(_.doc_id))
-      }
-
-    override def handleInitialState(hash: String, s: SeenHash,
-        timerValues: TimerValues): Unit =
-      seen.update(true)
-  }
+      embedding: Seq[Double], content_hash: String) extends HashedDoc
 
   /** The streaming capstone — ONE production ingest entry composing all
     * four sink families IN SEQUENCE per micro-batch, each stage seeing
@@ -1825,23 +1910,26 @@ object CorpusIngest {
     *     junk, not a duplicate: it must NOT claim its hash in state,
     *     so the gate runs BEFORE the exact stage (contrast the
     *     contamination gate below, which runs after by design).
-    *  2. EXACT dedup ([[startDedupedCorpusSink]]'s machinery verbatim:
+    *  2. EXACT dedup, the exact sink's stage ([[seenFirst]]:
     *     `transformWithState` seen-hash ValueState, fresh-start
-    *     initial-state bootstrap from the stored `content_hash` column,
-    *     absorbed-set bookkeeping + foreign-epoch hash fold on resume).
-    *     The benchmark contamination gate then runs in foreachBatch —
-    *     after the state probe, so a contaminated doc claims its hash
-    *     but never lands (the exact sink's documented intent).
-    *  3. LEXICAL near-dup ([[startNearDupCorpusSink]]'s band probe:
-    *     xxhash64 MinHash signatures, `pfx=`-bucket-pruned
-    *     `_graft_bands` equi-join, within-batch smaller-id-wins).
-    *  4. CONTAINMENT ([[startContainmentCorpusSink]]'s winnow probe:
-    *     shared-fingerprint rule with the `maxDf` boilerplate cap over
-    *     the `pfx=`-bucket-pruned `_graft_winnow` index — catches the
-    *     quote/subset arrivals resemblance-tuned banding misses).
-    *  5. SEMANTIC dedup ([[startSemanticDedupCorpusSink]]'s cell probe:
-    *     pinned `centroids`, cell-pruned `_graft_cells` equi-join,
-    *     `metric`/`semThreshold` pair rule).
+    *     initial-state bootstrap from the stored `content_hash` column;
+    *     [[startCorpusSink]]'s absorbed-set bookkeeping and foreign-epoch
+    *     hash fold on resume). The benchmark contamination gate then
+    *     runs in foreachBatch ([[SinkRun.landed]]) — after the state
+    *     probe, so a contaminated doc claims its hash but never lands
+    *     (the exact sink's documented intent).
+    *  3. LEXICAL near-dup ([[bandStage]]: xxhash64 MinHash signatures,
+    *     `pfx=`-bucket-pruned `_graft_bands` equi-join, within-batch
+    *     smaller-id-wins).
+    *  4. CONTAINMENT ([[winnowStage]]: shared-fingerprint rule with the
+    *     `maxDf` boilerplate cap over the `pfx=`-bucket-pruned
+    *     `_graft_winnow` index — catches the quote/subset arrivals
+    *     resemblance-tuned banding misses).
+    *  5. SEMANTIC dedup ([[cellStage]]: pinned `centroids`, cell-pruned
+    *     `_graft_cells` equi-join, `metric`/`semThreshold` pair rule).
+    *
+    * Stages 3–5 are the standalone sinks' own stages, run by the same
+    * batch body ([[probeBatch]]).
     *
     * Final keepers land in ONE corpus partition (epoch, batch_id) per
     * batch carrying text + content_hash + band columns + embedding +
@@ -1896,77 +1984,35 @@ object CorpusIngest {
       s"metric must be 'cosine' or 'dot', got '$metric'")
     if (metric == "cosine") require(semThreshold > 0.0 && semThreshold <= 1.0,
       s"cosine semThreshold must be in (0, 1], got $semThreshold")
-    val cp = new Path(checkpoint)
-    val cpFs = cp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val cm = Similarity.Ivf.centroidMatrix(centroids)
-    // billed as "start" (not floor-pinned): the sf1 floors showed the
-    // capstone is RESTART-overhead-bound (797 docs/s, wall flat on 10×
-    // docs), so the per-start reconcile work needs its own visible
-    // share in every replay's stage_sec before it can be attacked
-    val epoch = StageClock.time("start") {
-      // same order as the exact sink: heal, then rail (the capstone's
-      // exact stage keeps the same RocksDB seen-state)
-      resumePendingErasure(spark, corpusPath)
-      val fresh = pinnedEpoch(cpFs, cp).isEmpty
-      checkErasureRail(spark, corpusPath, cpFs, cp, fresh, "curation sink")
-      val e = queryEpoch(spark, corpusPath, checkpoint)
-      ensure(spark, corpusPath, bandsSidecar(k, bands, shingleN, bandPrefixLen),
-        () => rebandStaleBatches(spark, corpusPath, k, bands, shingleN))
-      ensure(spark, corpusPath, winnowSidecar(winnowK, winnowW, winnowPrefixLen))
-      ensure(spark, corpusPath, cellsSidecar(cm))
-      if (fresh) {
-        val (corpusFs, corpusDir) = fsFor(spark, corpusPath)
-        writeAbsorbed(cpFs, cp,
-          epochBatchDirs(corpusFs, corpusDir, "epoch=*/batch_id=*"))
-      }
-      e
-    }
-    // null-embedding docs fall to the quality gate with the junk (the
-    // CentroidDrift monitor's null tolerance): they cannot be
-    // cell-probed — a null cell would NPE the driver-side cellsHit
-    // collect and kill the query — and like any gate-rejected doc they
-    // claim no content hash
-    val gatedQ = docs
-      .filter(TextAnalysis.tokenCount(col("text")) >= minTokens &&
-        qualityGate(col("text")) && col("embedding").isNotNull)
-      .select(checkedDocId(col("doc_id").cast("long")).as("doc_id"), col("text"),
-        col("embedding").cast("array<double>").as("embedding"),
-        TextAnalysis.fingerprint(col("text")).as("content_hash"))
-      .as[CurationDoc]
-    val exactKeepers = gatedQ.groupByKey(_.content_hash)
-      .transformWithState(new SeenCurationHashProcessor,
-        TimeMode.None(), OutputMode.Append(), initialSeen(spark, corpusPath))
-    withStartConfs(spark, rocksDb = true) {
-      var cached: Seq[DataFrame] = Nil
-      try {
-        val benchGrams = StageClock.time("start")(
-          benchGramSet(benchmark, benchTextCol, benchGramN))
-        cached = benchGrams.toSeq
-        val foreignHashes = StageClock.time("start")(
-          foreignEpochHashes(spark, corpusPath, checkpoint, epoch))
-        cached = cached ++ foreignHashes
-        val q = StageClock.time("start")(exactKeepers.writeStream
-          .outputMode("append")
-          .trigger(trigger)
-          .option("checkpointLocation", checkpoint)
-          .foreachBatch { (batch: Dataset[CurationDoc], batchId: Long) =>
-            curationBatch(batch.toDF(), batchId, corpusPath, epoch,
-              foreignHashes, benchGrams, benchGramN,
-              k, bands, shingleN, bandPrefixLen,
-              winnowK, winnowW, minShared, maxDf, winnowPrefixLen,
-              cm, semThreshold, metric)
-          }
-          .start())
-        unpersistOnTermination(spark, q, cached)
-      } catch {
-        case t: Throwable =>
-          cached.foreach(_.unpersist(false))
-          throw t
-      }
-    }
+    startProbingSink(spark, corpusPath, checkpoint,
+      curationStages(k, bands, shingleN, bandPrefixLen, winnowK, winnowW,
+        minShared, maxDf, winnowPrefixLen, cm, semThreshold, metric),
+      Some("curation sink"), benchmark, benchTextCol, benchGramN, trigger)(
+      // null-embedding docs fall to the quality gate with the junk (the
+      // CentroidDrift monitor's null tolerance): they cannot be
+      // cell-probed — a null cell would NPE the driver-side cell
+      // collect and kill the query — and like any gate-rejected doc
+      // they claim no content hash
+      seenFirst(spark, corpusPath, docs
+        .filter(TextAnalysis.tokenCount(col("text")) >= minTokens &&
+          qualityGate(col("text")) && col("embedding").isNotNull)
+        .select(checkedDocId(col("doc_id").cast("long")).as("doc_id"), col("text"),
+          col("embedding").cast("array<double>").as("embedding"),
+          TextAnalysis.fingerprint(col("text")).as("content_hash"))
+        .as[CurationDoc]))
   }
 
-  /** Wall-clock attribution for [[curationBatch]]'s stages, powering
+  /** The curation sink's probe stages 3–5, in order. */
+  private def curationStages(k: Int, bands: Int, shingleN: Int,
+      bandPrefixLen: Int, winnowK: Int, winnowW: Int, minShared: Int,
+      maxDf: Int, winnowPrefixLen: Int, cm: Array[Array[Double]],
+      semThreshold: Double, metric: String): Seq[Stage] =
+    Seq(bandStage(k, bands, shingleN, bandPrefixLen),
+      winnowStage(winnowK, winnowW, minShared, maxDf, winnowPrefixLen),
+      cellStage(cm, metric, semThreshold))
+
+  /** Wall-clock attribution for [[probeBatch]]'s stages, powering
     * the streaming-capstone bench entry (Bench's `streaming` section):
     * each stage's driver-blocking actions are timed and accumulated
     * here when enabled (zero overhead otherwise — one atomic read per
@@ -1997,7 +2043,8 @@ object CorpusIngest {
     }
   }
 
-  /** The exact stage labels [[curationBatch]] bills to [[StageClock]] —
+  /** The exact stage labels a curation batch ([[probeBatch]] over the
+    * curation stages) bills to [[StageClock]] —
     * the single source of truth Bench's per-stage floors key against.
     * A label rename here without a floor re-key would make that floor
     * silently unfireable (`getOrElse(s, 0.0)` never exceeds 1.3×), so
@@ -2028,7 +2075,11 @@ object CorpusIngest {
     * sidecars no), `curation-after-band-write` (bands yes, winnow/cells
     * no), `curation-after-winnow-write` (cells missing alone), and
     * `curation-after-cells-write` (everything written, checkpoint
-    * uncommitted — the re-fire must be byte-idempotent).
+    * uncommitted — the re-fire must be byte-idempotent). They live in
+    * the batch body every probing sink shares ([[probeBatch]]), so a
+    * standalone near-dup, containment or semantic sink passes the
+    * corpus window and its own stage's window too; each [[Stage]]
+    * names its window (`band`, `winnow`, `cells`).
     *
     * The sidecar lifecycle's windows are derived from the family
     * table ([[Sidecar]]): each routine is written once, and a window's
@@ -2076,9 +2127,10 @@ object CorpusIngest {
       "doc_id == Long.MinValue is reserved (corpus-candidate sentinel id)")))
       .otherwise(c)
 
-  /** One [[startCurationSink]] micro-batch: stages 3–5 (the probe
-    * stages) plus the four partition writes. Extracted so the stage
-    * sequence reads top-to-bottom; every frame is batch-sized.
+  /** One [[startCurationSink]] micro-batch outside a stream (its
+    * foreachBatch body, for batch-mode probes): [[probeBatch]] over the
+    * curation stages, with the stage-2 residue (`foreignHashes`, the
+    * benchmark gate) as the sink would pass it.
     */
   private[graft] def curationBatch(batch0: DataFrame, batchId: Long,
       corpusPath: String, epoch: Long, foreignHashes: Option[DataFrame],
@@ -2086,156 +2138,11 @@ object CorpusIngest {
       k: Int, bands: Int, shingleN: Int, bandPrefixLen: Int,
       winnowK: Int, winnowW: Int, minShared: Int, maxDf: Int,
       winnowPrefixLen: Int, cm: Array[Array[Double]],
-      semThreshold: Double, metric: String): Unit = {
-    val spark = batch0.sparkSession
-    import spark.implicits._
-    // every persisted/checkpointed frame registers a release thunk the
-    // moment it exists, and the finally below runs them all: a batch
-    // that FAILS mid-probe (or at a planted FaultInjection point) must
-    // not leak its frames until session end — repeated failing restarts
-    // in one session would otherwise accumulate resident RDDs
-    val toFree = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
-    try {
-    // stage-2 residue: resume-time foreign-epoch hashes + the benchmark
-    // contamination gate (after the state probe — see the sink scaladoc)
-    val folded = foreignHashes.fold(batch0)(fh =>
-      batch0.join(fh, Seq("content_hash"), "left_anti"))
-    // checkpointed: the signature derivation, the winnow fingerprints
-    // and the final keeper anti-joins all re-enter this frame
-    val gated = StageClock.time("gate") {
-      contaminationGate(folded, benchGrams, benchGramN)
-        .localCheckpoint(true)
-    }
-    toFree += (() => Dedup.freeLocalCheckpoint(gated))
-    // stage 3: lexical near-dup via the bucket-pruned band index
-    val bandKeepers = StageClock.time("band") {
-      val sig = Dedup.lshSignature(gated, "text", k, bands, shingleN)
-      val pfxs = sig.select(explode(array((0 until bands).map(b =>
-          substring(col(s"band$b"), 1, bandPrefixLen)): _*)).as("p"))
-        .distinct().as[String].collect().toSeq
-      Dedup.incrementalNearDupFromSig(sig,
-        probeBands(spark, corpusPath, epoch, batchId, pfxs), "doc_id", bands)
-    }
-    toFree += (() => Dedup.freeLocalCheckpoint(bandKeepers))
-    // stage 4: containment via the bucket-pruned winnow index, over
-    // stage-3 survivors only
-    val fps = Dedup.winnowFingerprints(
-        bandKeepers.select(col("doc_id"), col("text")),
-        "doc_id", "text", winnowK, winnowW)
-      .select(col("doc_id"), col("fp_hash")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    toFree += (() => { fps.unpersist(false); () })
-    val (wPfxs, stored) = StageClock.time("winnow") {
-      val p = fps.select(substring(col("fp_hash"), 1, winnowPrefixLen).as("p"))
-        .distinct().as[String].collect().toSeq
-      (p, probeWinnow(spark, corpusPath, epoch, batchId, p)
-        .localCheckpoint(true))
-    }
-    toFree += (() => Dedup.freeLocalCheckpoint(stored))
-    val hot = fps.select(col("fp_hash"))
-      .union(stored.select(col("fp_hash")))
-      .groupBy(col("fp_hash")).agg(count(lit(1)).as("__df"))
-      .filter(col("__df") > maxDf).select("fp_hash")
-    val bf = fps.join(hot, Seq("fp_hash"), "left_anti")
-    val sf = stored.join(hot, Seq("fp_hash"), "left_anti")
-    val crossHit = bf.join(sf, "fp_hash")
-      .groupBy(col("doc_id"), col("__cid"))
-      .agg(count(lit(1)).as("__n"))
-      .filter(col("__n") >= minShared)
-      .select(col("doc_id")).distinct()
-    val withinHit = bf.select(col("doc_id").as("__ia"), col("fp_hash"))
-      .join(bf.select(col("doc_id").as("__ib"), col("fp_hash")), "fp_hash")
-      .filter(col("__ia") < col("__ib"))
-      .groupBy(col("__ia"), col("__ib"))
-      .agg(count(lit(1)).as("__n"))
-      .filter(col("__n") >= minShared)
-      .select(col("__ib").as("doc_id")).distinct()
-    val winnowKeepers = bandKeepers
-      .join(crossHit, Seq("doc_id"), "left_anti")
-      .join(withinHit, Seq("doc_id"), "left_anti")
-    // stage 5: semantic dedup via the cell-pruned index, over stage-4
-    // survivors only; persisted — the cell collect, both pair joins and
-    // the final anti-join all consume it
-    val assigned = winnowKeepers
-      .withColumn("cell",
-        element_at(NativeExpressions.nearestCells(col("embedding"), cm, 1), 1))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    toFree += (() => { assigned.unpersist(false); () })
-    // billed as "assign", not "cell": this collect is the first action
-    // on `assigned`, so it MATERIALIZES the whole stage-4 anti-join DAG
-    // plus the centroid argmin — round 14 read the lump as "the cell
-    // probe is 44% of wall" when most of it was stage-4 execution
-    // billing to the probe's label (judge item #1's premise)
-    val cellsHit = StageClock.time("assign") {
-      assigned.select("cell").distinct()
-        .collect().map(_.getInt(0)).toSeq
-    }
-    // ONE candidate side for both drop arms (round 15 — was two joins
-    // + union + distinct): stored same-cell vectors get a sentinel
-    // candidate id (MinValue — below every real doc_id, so the
-    // smaller-id-wins predicate admits every stored candidate), batch
-    // vectors carry their own id. One cell equi-join and one predicate
-    // replace two joins, a union, and a distinct that fed a left_anti
-    // (an anti-join needs no deduped right side). Fewer exchanges AND
-    // one codegen'd plan fragment instead of three — the per-batch
-    // Janino compile of the probe plan was a measured double-digit CPU
-    // share at bench batch sizes.
-    val candidates = probeCells(spark, corpusPath, epoch, batchId, cellsHit)
-      .select(col("cell"), lit(Long.MinValue).as("__cand_id"),
-        col("__corpus_emb").as("__cand_emb"))
-      .union(assigned.select(col("cell"), col("doc_id").as("__cand_id"),
-        col("embedding").as("__cand_emb")))
-    val dropped = assigned.select(col("doc_id"), col("cell"), col("embedding"))
-      .join(candidates, "cell")
-      .filter(col("__cand_id") < col("doc_id") &&
-        Similarity.pairScore(metric, col("embedding"), col("__cand_emb"))
-          >= semThreshold)
-      .select(col("doc_id"))
-    // checkpointed: FOUR writes below consume the final keeper set.
-    // With `assigned` already materialized above, this action times the
-    // ACTUAL probe: the cell-pruned sidecar read + the pair join
-    val finalKeepers = StageClock.time("cell") {
-      assigned
-        .join(dropped, Seq("doc_id"), "left_anti")
-        .localCheckpoint(true)
-    }
-    toFree += (() => Dedup.freeLocalCheckpoint(finalKeepers))
-    // write clustering: see [[clusterForWrite]] — the measured
-    // many-tiny-files fix, one writer task per partition dir
-    StageClock.time("write") {
-    writePartition(finalKeepers, corpusPath, None, Seq("doc_id"), epoch, batchId)
-    // the crash window the double-failure reconcile routines exist for:
-    // corpus written, sidecars not yet
-    FaultInjection.maybeTrip("curation-after-corpus-write")
-    writeBatch(bandsSidecar(k, bands, shingleN, bandPrefixLen), corpusPath,
-      Dedup.bandsLong(finalKeepers, bands, Nil)
-        .withColumn("pfx", substring(col("bh"), 1, bandPrefixLen)),
-      epoch, batchId)
-    // the sidecar families are non-atomic among THEMSELVES too: each
-    // inter-sidecar gap gets its own plantable crash window, so the
-    // reconcile/adoption heal is provable per boundary, not just for
-    // the corpus-written-sidecars-not case
-    FaultInjection.maybeTrip("curation-after-band-write")
-    writeBatch(winnowSidecar(winnowK, winnowW, winnowPrefixLen), corpusPath,
-      finalKeepers.select(col("doc_id")).join(fps, "doc_id")
-        .withColumn("pfx", substring(col("fp_hash"), 1, winnowPrefixLen)),
-      epoch, batchId)
-    FaultInjection.maybeTrip("curation-after-winnow-write")
-    writeBatch(cellsSidecar(cm), corpusPath,
-      finalKeepers.select(col("doc_id"), col("embedding").as("emb"), col("cell")),
-      epoch, batchId)
-    // all four families written but the checkpoint NOT yet committed:
-    // the restart re-fires the whole batch and every dynamic overwrite
-    // must be idempotent (same bytes, same partitions)
-    FaultInjection.maybeTrip("curation-after-cells-write")
-    }
-    ()
-    } finally {
-      // release order = registration order (upstream first); a thunk
-      // that itself throws must not block the remaining releases
-      toFree.foreach(f => try f() catch { case _: Exception => () })
-    }
-  }
+      semThreshold: Double, metric: String): Unit =
+    probeBatch(batch0, batchId,
+      SinkRun(corpusPath, epoch, foreignHashes, benchGrams, benchGramN),
+      curationStages(k, bands, shingleN, bandPrefixLen, winnowK, winnowW,
+        minShared, maxDf, winnowPrefixLen, cm, semThreshold, metric))
 
   /** The composed sink's monitor bundle — [[semanticDriftAlerts]]'s
     * share-the-source composition applied to all three monitor axes:
@@ -2385,8 +2292,7 @@ object CorpusIngest {
       bands: Int = 4, shingleN: Int = 3, prefixLen: Int = 1): Unit = {
     require(prefixLen >= 1 && prefixLen <= 8,
       s"prefixLen must be in [1,8], got $prefixLen")
-    ensure(spark, corpusPath, bandsSidecar(k, bands, shingleN, prefixLen),
-      () => rebandStaleBatches(spark, corpusPath, k, bands, shingleN))
+    ensure(spark, corpusPath, bandsSidecar(k, bands, shingleN, prefixLen))
   }
 
   /** [[buildBandIndex]] for the semantic sink's cell index —

@@ -54,7 +54,7 @@ object CurProbe {
         winnowPrefixLen = 2, cm = cm, semThreshold = 0.9, metric = "cosine")
     }
     // warm + index bootstrap: batch 0 goes through the REAL sink (the
-    // ensure* index builders run at sink start, not in the batch body)
+    // sidecar ensure runs at sink start, not in the batch body)
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val cp = java.nio.file.Files.createTempDirectory("probe-cp").toString
     val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String, Seq[Double])]

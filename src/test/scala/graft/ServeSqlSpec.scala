@@ -193,7 +193,7 @@ class ServeSqlSpec extends SparkSpec {
     // stage 1 (keepNarrow restated over array SQL; minTokens=1 default
     // is subsumed by the >= 30 Gopher floor) + stage 2 (the NFC-canon
     // md5, stored-hash anti-join, within-batch min-doc_id window — the
-    // SeenCurationHashProcessor's deterministic keeper rule)
+    // SeenHashProcessor's deterministic keeper rule)
     val stops = graft.functions.TextAnalysis.EnglishStopwords
       .map(s => s"'$s'").mkString(", ")
     val stage12 =

@@ -1680,6 +1680,36 @@ class StreamingSpec extends SparkSpec {
       ndMs.toDF().toDF("doc_id", "text"), tmpDir("unp-nd-corpus"),
       tmpDir("unp-nd-cp"), minTokens = 1, benchmark = Some(bench)).awaitTermination()
     waitUnpersisted(baseline)
+
+    // a batch (non-streaming) frame is refused by every standalone sink
+    // before any side effect: no gram set registered with the cache
+    // manager (an entry that was never materialized is invisible to
+    // getPersistentRDDs; storageLevel looks the plan up there), no
+    // epoch claim, no checkpoint marker
+    val grams = bench.select(explode(graft.functions.NativeExpressions.shingleHashes(
+      graft.functions.Dedup.shingleCanon(col("text")), 8)).as("__g")).distinct()
+    val batchDocs = Seq((1L, "a batch frame document body", Seq(1.0, 0.0)))
+      .toDF("doc_id", "text", "embedding")
+    val starts: Seq[(String, (String, String) => Any)] = Seq(
+      "near-dup" -> ((c, cp) => graft.streaming.CorpusIngest.startNearDupCorpusSink(
+        batchDocs, c, cp, benchmark = Some(bench))),
+      "containment" -> ((c, cp) => graft.streaming.CorpusIngest.startContainmentCorpusSink(
+        batchDocs, c, cp, benchmark = Some(bench))),
+      "semantic" -> ((c, cp) => graft.streaming.CorpusIngest.startSemanticDedupCorpusSink(
+        batchDocs, c, cp, Seq((0, Seq(1.0, 0.0))).toDF("cell_id", "centroid"),
+        benchmark = Some(bench))))
+    starts.foreach { case (name, start) =>
+      val corpusDir = tmpDir(s"unp-batch-$name-corpus")
+      val cpDir = tmpDir(s"unp-batch-$name-cp")
+      val e = intercept[IllegalArgumentException](start(corpusDir, cpDir))
+      assert(e.getMessage.contains("streaming"), s"$name: ${e.getMessage}")
+      assert(grams.storageLevel === org.apache.spark.storage.StorageLevel.NONE,
+        s"$name: a refused start left the gram set in the cache manager")
+      assert(!new java.io.File(corpusDir, "_graft_epochs").exists(),
+        s"$name: a refused start claimed an epoch")
+      assert(!new java.io.File(cpDir, "graft-epoch").exists(),
+        s"$name: a refused start pinned an epoch in the checkpoint")
+    }
   }
 
   test("band/cell index reconcile: a corpus batch missing from the index is backfilled at next start") {
@@ -2221,8 +2251,8 @@ class StreamingSpec extends SparkSpec {
   test("backfill crash lattice (postings + stats): marker-window and torn-write crashes heal on the next build") {
     // the round-16 restart-writer lattice, postings family: the same
     // pending-marker windows as bands/winnow/cells, exercised through
-    // ensurePostingsIndex's reconcile (both the bucketed postings and
-    // the unbucketed stats sidecar)
+    // the postings family's ensure/reconcile (both the bucketed postings
+    // and the unbucketed stats sidecar)
     import graft.functions.TextAnalysis
     val corpus = tmpDir("postings-crash")
     def part(rows: Seq[(Long, String)], epoch: Long, batch: Long): Unit =
@@ -2431,7 +2461,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   // ---- compaction crash lattice: every window of the shared
-  // loser-removal tail (sweepLosersAndReindex), proven per boundary
+  // loser-removal tail (removeAndReindex), proven per boundary
   // like the sink writes'. Design claim under test: while the corpus
   // still holds the losers, a re-run re-derives the identical loser
   // set (candidates come from stored TEXT, never from the index), so
@@ -3417,6 +3447,18 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
+  /** What one [[graft.streaming.CorpusIngest.curationBatch]] call runs on
+    * the pruning fixture's probe batch (see the test below): its actions
+    * (SQL executions: 4 local checkpoints, 3 driver collects, 4 writes)
+    * and at most this many Spark jobs. The job count is not exact: AQE
+    * submits each shuffle stage as its own job, and whether the final
+    * cut's plan submits one more stage depends on which of its stages
+    * finish first — repeated probes on one build read 39–40 before the
+    * corpus grows and 40–41 after.
+    */
+  private val CurationBatchActions = 11L
+  private val CurationBatchMaxJobs = 41L
+
   test("curation sink composed probes are bucket/cell-pruned: probe bytes do NOT grow with corpus elsewhere") {
     // The per-family pruning proofs, applied to the COMPOSED per-batch
     // body (curationBatch — exactly the sink's foreachBatch): probe a
@@ -3467,11 +3509,24 @@ class StreamingSpec extends SparkSpec {
 
     val bytesRead = new java.util.concurrent.atomic.AtomicLong
     val events = new java.util.concurrent.atomic.AtomicLong
+    val jobs = new java.util.concurrent.atomic.AtomicLong
+    val actions = new java.util.concurrent.atomic.AtomicLong
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
         events.incrementAndGet()
         if (e.taskMetrics != null) bytesRead.addAndGet(e.taskMetrics.inputMetrics.bytesRead)
       }
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        events.incrementAndGet()
+        jobs.incrementAndGet()
+      }
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+        e match {
+          case _: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+            events.incrementAndGet()
+            actions.incrementAndGet()
+          case _ => ()
+        }
     }
     def drained(): Unit = {
       var prev = -1L
@@ -3488,6 +3543,8 @@ class StreamingSpec extends SparkSpec {
       .withColumn("content_hash", TextAnalysis.fingerprint(col("text")))
     def measuredProbe(id: Long, batchId: Long): Long = {
       bytesRead.set(0)
+      jobs.set(0)
+      actions.set(0)
       spark.sparkContext.addSparkListener(listener)
       try {
         graft.streaming.CorpusIngest.curationBatch(
@@ -3518,6 +3575,16 @@ class StreamingSpec extends SparkSpec {
 
     val b1 = measuredProbe(900L, 0L)
     assert(b1 > 0L, "probe read nothing — the composed probes did not run")
+    // the batch body's cost in actions and jobs, pinned: a curation
+    // micro-batch pays per cut, collect and write, so a change to any of
+    // them (an added cut, a fused write) shows here first
+    def pinnedCost(when: String): Unit = {
+      assert(actions.get() === CurationBatchActions,
+        s"curation batch ran ${actions.get()} actions $when, pinned $CurationBatchActions")
+      assert(jobs.get() <= CurationBatchMaxJobs,
+        s"curation batch ran ${jobs.get()} jobs $when, pinned at most $CurationBatchMaxJobs")
+    }
+    pinnedCost("on the first probe")
     assert(ids() === Set(1L), "the semantic-dup probe must not land")
     val facingBefore = probeFacingTree()
     def treeBytes(): Long = walk(new java.io.File(corpus))
@@ -3540,6 +3607,7 @@ class StreamingSpec extends SparkSpec {
     // and the measured probe cost stays flat: identical files read, so
     // any drift is listener jitter — bound it at ≪ the corpus growth
     val b2 = measuredProbe(901L, 1L)
+    pinnedCost("after corpus growth")
     assert(math.abs(b2 - b1) <= growth / 20,
       s"composed probe bytes grew with corpus in OTHER buckets/cells ($b1 → $b2, corpus +$growth)")
 
@@ -3673,8 +3741,8 @@ class StreamingSpec extends SparkSpec {
     }
   }
   // delete a sidecar family's (epoch, batch_id) leaves across ALL its
-  // bucket dirs — the double-failure state missingIndexBatches exists
-  // to reconcile (corpus partition present, index partition absent)
+  // bucket dirs — the double-failure state the start-time reconcile
+  // exists to backfill (corpus partition present, index partition absent)
   private def deleteFamilyBatch(corpus: String, fam: String,
       epoch: Long, batch: Long): Unit = {
     val root = new java.io.File(corpus, s"_graft_$fam")
@@ -3702,7 +3770,7 @@ class StreamingSpec extends SparkSpec {
       ms.addData(crashBatch1: _*)
       crashRun(corpus, cp, ms)
       rmRfDir(new java.io.File(corpus, s"_graft_$fam"))
-      // crashed adoption: the ensure* runs at query START, so the fault
+      // crashed adoption: ensure runs at query START, so the fault
       // fires from startCurationSink itself (driver-side, pre-stream)
       graft.streaming.CorpusIngest.FaultInjection.arm(point)
       val e = intercept[RuntimeException] { crashRun(corpus, cp, ms) }
@@ -3756,7 +3824,7 @@ class StreamingSpec extends SparkSpec {
       // window 2 — written, marker uncleared, then a TEAR: pre-marker,
       // a backfill that committed SOME bucket leaves made the batch
       // look present to the existence diff and the tear went permanent
-      // (the documented missingIndexBatches residual). With the marker
+      // (the old existence-diff residual). With the marker
       // the redo is unconditional.
       deleteFamilyBatch(corpus, fam, 0L, 1L)
       graft.streaming.CorpusIngest.FaultInjection.arm(s"backfill-$fam-written")
@@ -4212,7 +4280,7 @@ class StreamingSpec extends SparkSpec {
     val a1 = audit()
     assert(a1("postings-stats")._1 === "attention" &&
       a1("postings-stats")._2.contains("missing stats"), a1("postings-stats").toString)
-    // the named heal: an exact-sink start (ensurePostingsIndex reconciles)
+    // the named heal: an exact-sink start (the postings ensure reconciles)
     val ms2 = MemoryStream[(Long, String)]
     ms2.addData((3L, "charlie doc text"))
     graft.streaming.CorpusIngest.startDedupedCorpusSink(
