@@ -2096,7 +2096,10 @@ object CorpusIngest {
     *    [[removeAndReindex]]'s loser-removal windows, stem `compaction`
     *    for the compactions and `delete` for [[deleteDocs]] (which adds
     *    `delete-after-marker`; all heal by re-running the op, the
-    *    erasure with the same tombstone ids).
+    *    erasure with the same tombstone ids);
+    *  - `race-fold-{before,after}-rename` — [[RaceIngest.startParquetSink]]'s
+    *    base fold: staged but not renamed, and renamed before the old-base
+    *    sweep (both heal by the restart replaying the batch).
     */
   private[graft] object FaultInjection {
     private val tripAt =

@@ -1,9 +1,15 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, StreamingQuery, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
+import scala.util.matching.Regex
 
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, StreamingQuery, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
+import org.apache.spark.sql.types.{LongType, StructType}
+
+import graft.model.Schemas
 import graft.ops.F1Ops
 
 /** The reference's Structured Streaming core (SURVEY.md §2.7; reference:
@@ -33,6 +39,33 @@ object RaceIngest {
     * exactly partition N with identical content — idempotent at the sink,
     * no read-side dedup required for replays. (`readExactlyOnce` covers
     * records the producer resends in a later batch.)
+    *
+    * Layout under `outPath`:
+    *  - `batch_id=N/` — one partition per micro-batch, never touched
+    *    after its batch commits, so a plain `spark.read.parquet(outPath)`
+    *    sees every row with `batch_id` as its partition column;
+    *  - `_compacted/upto=K/` — a base: every row of the partitions with
+    *    id ≤ K, verbatim, `batch_id` kept as a data column. Spark's
+    *    listing skips `_`-prefixed directories, so plain root readers
+    *    never see the bases.
+    *
+    * Fold rule: after batch N's partition is written, the tail — the
+    * partitions in (K, N] above the newest base K — is folded once it
+    * holds half of `spark.sql.sources.parallelPartitionDiscovery.threshold`
+    * (16 of 32 by default). Base ∪ tail is written to
+    * `_compacted/upto=N.tmp` and renamed to `upto=N`; then all but the
+    * newest two bases go, so a reader that listed the previous base
+    * still finds its files for another threshold/2 triggers. A fold costs one write job over the base
+    * plus the tail (read with the declared schema, no listing job), once
+    * every threshold/2 triggers. A batch N at or below some base's K (a
+    * replay, or a fresh checkpoint over an old sink) first deletes every
+    * base with K ≥ N, so a base always equals the partitions ≤ K it was
+    * folded from.
+    *
+    * Limits: storage is ~2× the data (the bases repeat the partitions),
+    * and each fold rewrites the whole base into one file — tiny for
+    * per-driver race rows, linear in the sink's size at any scale.
+    * Tiered (log-structured) merging is out of scope.
     */
   def startParquetSink(raw: DataFrame, outPath: String, checkpoint: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
@@ -41,14 +74,22 @@ object RaceIngest {
       .trigger(trigger)
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        val layout = new SinkLayout(batch.sparkSession, outPath)
+        layout.dropBasesFrom(batchId)
         batch.withColumn("batch_id", lit(batchId))
           .write.mode("overwrite")
           .option("partitionOverwriteMode", "dynamic")
           .partitionBy("batch_id")
           .parquet(outPath)
-        ()
+        layout.foldThrough(batchId)
       }
       .start()
+
+  /** The rows [[startParquetSink]] stores: the declared fact schema plus
+    * the writing batch's id. `batch_id` is a `long` — a plain root read
+    * infers the partition column as `int`.
+    */
+  private[graft] val SinkSchema: StructType = Schemas.raceResults.add("batch_id", LongType, nullable = false)
 
   /** Exactly-once read view over the parquet sink. [[startParquetSink]]
     * is already idempotent per batch (a replayed batch overwrites its own
@@ -57,10 +98,100 @@ object RaceIngest {
     * in a different partition. Every row carries its batch id, so a keyed
     * read-side dedup (keep the first batch per natural key) serves each
     * natural key once without coordinating writers.
+    *
+    * Reader contract: one driver listing of `_compacted/`, one of the
+    * root; the view is the newest base ∪ the partitions above its K,
+    * both read with [[SinkSchema]] — no listing job, no footer job, and
+    * a file count bounded by one base plus the fold point, however many
+    * triggers wrote the sink. Its rows equal a plain root read's. The
+    * first-wins order is total — `batch_id`, then every other column in
+    * [[SinkSchema]] order — so two different same-key rows of one batch
+    * resolve the same way in any file layout. An existing sink with no
+    * batch yet reads empty; a missing path fails as a plain read does
+    * (`PATH_NOT_FOUND`).
     */
   def readExactlyOnce(spark: org.apache.spark.sql.SparkSession, path: String,
       naturalKey: Seq[String] = Seq("session_key", "driver_number")): DataFrame =
-    F1Ops.firstWinsDedup(spark.read.parquet(path), naturalKey, Seq(col("batch_id")))
+    firstWins(new SinkLayout(spark, path).view(), naturalKey)
+
+  /** Each natural key's first row of `rows` in the total order
+    * `batch_id`, then every other [[SinkSchema]] column.
+    */
+  private[graft] def firstWins(rows: DataFrame, naturalKey: Seq[String]): DataFrame = {
+    val rest = SinkSchema.fieldNames.toSeq.filterNot(f => f == "batch_id" || naturalKey.contains(f))
+    F1Ops.firstWinsDedup(rows, naturalKey, ("batch_id" +: rest).map(col))
+  }
+
+  private val BatchDir = "batch_id=(\\d+)".r
+  private val BaseDir = "upto=(\\d+)".r
+  private val AnyBaseDir = "upto=(\\d+)(?:\\.tmp)?".r
+
+  /** The on-disk layout of one [[startParquetSink]] root (see its doc). */
+  private final class SinkLayout(spark: SparkSession, path: String) {
+    private val root = new Path(path)
+    private val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    private val compacted = new Path(root, "_compacted")
+
+    /** Entry names of `dir`, or None when it does not exist. */
+    private def names(dir: Path): Option[Seq[String]] =
+      try Some(fs.listStatus(dir).toSeq.map(_.getPath.getName))
+      catch { case _: java.io.FileNotFoundException => None }
+
+    /** The ids `re` captures from `names`, ascending and distinct. */
+    private def ids(names: Seq[String], re: Regex): Seq[Long] =
+      names.collect { case re(k) => k.toLong }.distinct.sorted
+
+    private def bases(): Seq[Long] = ids(names(compacted).getOrElse(Nil), BaseDir)
+    private def baseDir(k: Long) = new Path(compacted, s"upto=$k")
+    private def stage(k: Long) = new Path(compacted, s"upto=$k.tmp")
+
+    /** Deletes base `k`, staged or complete. */
+    private def drop(k: Long): Unit = {
+      fs.delete(stage(k), true)
+      fs.delete(baseDir(k), true)
+    }
+
+    /** Base `k` (if any) ∪ partitions `tail`, read with [[SinkSchema]]. */
+    private def rows(k: Option[Long], tail: Seq[Long]): DataFrame = {
+      val base = k.map(b => spark.read.schema(SinkSchema).parquet(baseDir(b).toString))
+      val parts = Option.when(tail.nonEmpty)(spark.read.schema(SinkSchema)
+        .option("basePath", path).parquet(tail.map(b => new Path(root, s"batch_id=$b").toString): _*))
+      (base ++ parts).reduceOption(_.unionByName(_)).getOrElse(
+        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], SinkSchema))
+    }
+
+    /** The newest base ∪ the partitions above it; a missing root fails
+      * with the plain read's own PATH_NOT_FOUND.
+      */
+    def view(): DataFrame = {
+      val k = bases().lastOption
+      names(root).fold(spark.read.schema(SinkSchema).parquet(path)) { ns =>
+        rows(k, ids(ns, BatchDir).filter(b => k.forall(b > _)))
+      }
+    }
+
+    /** Deletes every base, staged or complete, with K ≥ `batchId`. */
+    def dropBasesFrom(batchId: Long): Unit =
+      ids(names(compacted).getOrElse(Nil), AnyBaseDir).filter(_ >= batchId).foreach(drop)
+
+    /** Folds the partitions in (K, `batchId`] into base `upto=batchId`
+      * once they reach the fold point; then keeps the newest two bases.
+      */
+    def foldThrough(batchId: Long): Unit = {
+      val k = bases().lastOption
+      val tail = ids(names(root).getOrElse(Nil), BatchDir).filter(b => b <= batchId && k.forall(b > _))
+      val threshold = spark.conf.get(SQLConf.PARALLEL_PARTITION_DISCOVERY_THRESHOLD.key).toInt
+      if (tail.size >= math.max(1, threshold / 2)) {
+        rows(k, tail).coalesce(1).write.mode("overwrite").parquet(stage(batchId).toString)
+        CorpusIngest.FaultInjection.maybeTrip("race-fold-before-rename")
+        require(fs.rename(stage(batchId), baseDir(batchId)),
+          s"could not rename ${stage(batchId)} to ${baseDir(batchId)}")
+        CorpusIngest.FaultInjection.maybeTrip("race-fold-after-rename")
+        val keep = bases().takeRight(2).toSet
+        ids(names(compacted).getOrElse(Nil), AnyBaseDir).filterNot(keep).foreach(drop)
+      }
+    }
+  }
 
   /** Kafka source wiring (S1; reference: spark_ingestion.py:80–88). Not
     * exercised in tests (no broker in the harness) but the full production

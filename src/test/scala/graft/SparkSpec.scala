@@ -42,4 +42,16 @@ trait SparkSpec extends AnyFunSuite {
 
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** Runs `body` with the session confs `pairs` set, then restores the
+    * confs as they were (a stream started inside keeps its own copy).
+    */
+  def withSQLConf[T](pairs: (String, String)*)(body: => T): T = {
+    val prior = pairs.map { case (k, _) => k -> spark.conf.getAll.get(k) }
+    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally prior.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }
