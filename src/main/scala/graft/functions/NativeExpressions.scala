@@ -1,10 +1,13 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftBridge}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, BoundReference, Expression, GenericInternalRow, JsonToStructs, TimeZoneAwareExpression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expressions for the hot per-row kernels of the dedup /
@@ -1928,9 +1931,196 @@ object NativeExpressions {
     }
   }
 
+  // ---------------------------------------------------- Flat JSON parse
+
+  /** `from_json(child, schema)` over a flat schema, answered in one byte
+    * scan of the record when its token shapes fix the result. Spark's
+    * parse — a `JsonToStructs` with this schema, no options and the
+    * session time zone, exactly what `from_json` analyzes to — is held
+    * as the fallback rather than as a child: a `CodegenFallback` anywhere
+    * in a node's expressions keeps the whole node out of whole-stage
+    * codegen, and `JsonToStructs` decodes each record through a fresh
+    * `Reader` into Jackson.
+    *
+    * The kernel owns a record when `schema` has only string, int and
+    * boolean fields, none named as the corrupt-record column, and the
+    * record is: one object after optional whitespace; quoted keys and
+    * string values of printable ASCII with no escapes; values that are
+    * strings, ints of at most 9 digits (`-?(0|[1-9][0-9]{0,8})`, not
+    * `-0`), `true`, `false` or `null`, each of its field's type unless
+    * `null`; no schema field twice; only whitespace after the closing
+    * brace; and fewer than 1,000 bytes, so no token can reach Jackson's
+    * 1,000-char number limit. For such a record Jackson's result is
+    * fixed — named fields set, unknown ones skipped, the rest null — so
+    * the kernel builds it directly. Every other record (blank lines and
+    * their null struct, malformed or truncated lines, type mismatches and
+    * their partial results, escapes, non-ASCII, single quotes, trailing
+    * bytes) goes to the fallback unchanged, so the two are equal by
+    * construction.
+    */
+  case class FlatJsonExpr(child: Expression, schema: StructType, timeZoneId: Option[String] = None)
+      extends UnaryExpression with TimeZoneAwareExpression {
+    require(schema.length <= 64 && schema.fields.forall(f => f.metadata == Metadata.empty &&
+      (f.dataType == StringType || f.dataType == IntegerType || f.dataType == BooleanType)),
+      s"flat_json takes a flat schema of string, int and boolean fields: $schema")
+
+    override val dataType: DataType = StructType(schema.fields.map(_.copy(nullable = true)))
+    override def nullable: Boolean = true
+    override def prettyName: String = "flat_json"
+    override def withTimeZone(timeZoneId: String): TimeZoneAwareExpression =
+      copy(timeZoneId = Some(timeZoneId))
+
+    @transient private lazy val fallback =
+      JsonToStructs(schema, Map.empty, BoundReference(0, StringType, nullable = true), timeZoneId)
+
+    /** The schema's field names as bytes, or null when the kernel owns no
+      * record: a field named as the corrupt-record column is from_json's.
+      */
+    @transient private lazy val names: Array[Array[Byte]] =
+      if (schema.fieldNames.contains(SQLConf.get.columnNameOfCorruptRecord)) null
+      else schema.fieldNames.map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    @transient private lazy val types: Array[DataType] = schema.fields.map(_.dataType)
+
+    /** The parse of a non-null record: the kernel's row, or `from_json`'s
+      * when the kernel does not own the record.
+      */
+    def compute(s: UTF8String): InternalRow = {
+      val row = if (names == null) null else scan(s)
+      if (row != null) row else fallback.nullSafeEval(s).asInstanceOf[InternalRow]
+    }
+
+    /** The row for `s`, or null when `s` is not of the owned shapes. */
+    private[graft] def scan(s: UTF8String): InternalRow = {
+      val base = s.getBaseObject
+      val off = s.getBaseOffset
+      val n = s.numBytes()
+      if (n >= MaxFlatJsonBytes) return null
+      // past the end reads as NUL, which no owned shape contains
+      @inline def at(i: Int): Char =
+        if (i < n) (Platform.getByte(base, off + i) & 0xff).toChar else '\u0000'
+      @inline def ws(i0: Int): Int = {
+        var i = i0
+        while ({ val b = at(i); b == ' ' || b == '\n' || b == '\r' || b == '\t' }) i += 1
+        i
+      }
+      /** End (exclusive) of a printable-ASCII, escape-free string whose
+        * opening quote is at `i - 1`, or -1.
+        */
+      @inline def strEnd(i0: Int): Int = {
+        var i = i0
+        var b = at(i)
+        while (b >= 0x20 && b < 0x7f && b != '"' && b != '\\') { i += 1; b = at(i) }
+        if (b == '"') i else -1
+      }
+      @inline def literal(i: Int, word: String): Boolean = {
+        var k = 1
+        while (k < word.length && at(i + k) == word.charAt(k)) k += 1
+        k == word.length
+      }
+      val values = new Array[Any](names.length)
+      var seen = 0L
+      var i = ws(0)
+      if (at(i) != '{') return null
+      i = ws(i + 1)
+      if (at(i) == '}') i += 1
+      else {
+        var open = true
+        while (open) {
+          if (at(i) != '"') return null
+          val ke = strEnd(i + 1)
+          if (ke < 0) return null
+          val field = fieldOf(base, off + i + 1, ke - i - 1)
+          i = ws(ke + 1)
+          if (at(i) != ':') return null
+          i = ws(i + 1)
+          val want = if (field < 0) null else types(field)
+          var v: Any = null
+          at(i) match {
+            case '"' =>
+              val e = strEnd(i + 1)
+              if (e < 0 || (want != null && want != StringType)) return null
+              val bytes = new Array[Byte](e - i - 1)
+              Platform.copyMemory(base, off + i + 1, bytes, Platform.BYTE_ARRAY_OFFSET, bytes.length)
+              v = UTF8String.fromBytes(bytes)
+              i = e + 1
+            case 't' | 'f' =>
+              val word = if (at(i) == 't') "true" else "false"
+              if (!literal(i, word) || (want != null && want != BooleanType)) return null
+              v = word.length == 4
+              i += word.length
+            case 'n' =>
+              if (!literal(i, "null")) return null
+              i += 4
+            case b if b == '-' || (b >= '0' && b <= '9') =>
+              if (want != null && want != IntegerType) return null
+              val neg = b == '-'
+              var j = if (neg) i + 1 else i
+              val d0 = j
+              var x = 0
+              while (at(j) >= '0' && at(j) <= '9') { x = x * 10 + (at(j) - '0'); j += 1 }
+              val digits = j - d0
+              if (digits == 0 || digits > 9 || (at(d0) == '0' && (digits > 1 || neg))) return null
+              v = if (neg) -x else x
+              i = j
+            case _ => return null
+          }
+          // a value must end at whitespace, a comma or the closing brace:
+          // `1.5`, `1e3`, `truex` and the like are Jackson's to judge
+          i = ws(i)
+          if (field >= 0) {
+            if ((seen & (1L << field)) != 0) return null
+            seen |= 1L << field
+            values(field) = v
+          }
+          at(i) match {
+            case ',' => i = ws(i + 1)
+            case '}' => i += 1; open = false
+            case _ => return null
+          }
+        }
+      }
+      if (ws(i) != n) return null
+      new GenericInternalRow(values)
+    }
+
+    /** The schema field whose name is the `len` bytes at `addr`, or -1. */
+    private def fieldOf(base: Object, addr: Long, len: Int): Int = {
+      var f = 0
+      while (f < names.length) {
+        val name = names(f)
+        if (name.length == len) {
+          var k = 0
+          while (k < len && name(k) == Platform.getByte(base, addr + k)) k += 1
+          if (k == len) return f
+        }
+        f += 1
+      }
+      -1
+    }
+
+    override protected def nullSafeEval(input: Any): Any = compute(input.asInstanceOf[UTF8String])
+
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val ref = ctx.addReferenceObj("flatJson", this, classOf[FlatJsonExpr].getName)
+      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c); ${ev.isNull} = ${ev.value} == null;")
+    }
+
+    override protected def withNewChildInternal(newChild: Expression): Expression =
+      copy(child = newChild)
+  }
+
+  /** Records at or over this many bytes go to `from_json`: Jackson's
+    * default number length limit is 1,000 chars.
+    */
+  private final val MaxFlatJsonBytes = 1000
+
   // -------------------------------------------------------------- Columns
 
   import GraftBridge.{column, expression}
+
+  /** `from_json(record, schema)` through [[FlatJsonExpr]]. */
+  def flatJson(record: Column, schema: StructType): Column =
+    column(FlatJsonExpr(expression(record), schema))
 
   def nfcNormalize(c: Column): Column = column(NfcNormalizeExpr(expression(c)))
 

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.functions.NativeExpressions
 import graft.model.Schemas
 
 /** The reference's operator surface as composable, individually testable
@@ -123,11 +124,31 @@ object F1Ops {
   // ---------------------------------------------------------------- parse
 
   /** P1+P2+P3 — Kafka value bytes → declared-schema struct → flat columns
-    * (reference: spark_ingestion.py:91–93). Narrow, codegen'd, no shuffle.
+    * (reference: spark_ingestion.py:91–93). Narrow, no shuffle, whole-stage
+    * codegen'd, one parse per record. The parse is
+    * [[NativeExpressions.FlatJsonExpr]], a one-pass byte kernel with
+    * Spark's `from_json` as its fallback. The kernel answers a record
+    * that is one flat object of escape-free printable-ASCII strings, ints
+    * of at most 9 digits, booleans and nulls, each of its field's type,
+    * with no field twice, nothing but whitespace after it, and under
+    * 1,000 bytes (Jackson's number length limit). Every other record goes
+    * to `from_json` unchanged, so the rows equal a plain `from_json`
+    * parse. `from_json` alone is a `CodegenFallback`, which keeps its
+    * whole plan node out of whole-stage codegen. The parse is evaluated
+    * [[once]] per record, so the completeness filter does not parse again.
     */
   def parseRaceJson(raw: DataFrame, valueCol: String = "value"): DataFrame =
-    raw.select(from_json(col(valueCol).cast("string"), Schemas.raceResultMessage).as("data"))
-      .select("data.*")
+    once(raw, NativeExpressions.flatJson(col(valueCol).cast("string"), Schemas.raceResultMessage))
+
+  /** The fields of `struct` as columns, with `struct` evaluated once per
+    * row. A Filter on a field of a projected expression is pushed below
+    * the Project by inlining the expression into it, so a filter on a
+    * parsed field parses the record a second time; behind a Generate
+    * (`inline` of a one-element array), a filter on its output stays
+    * above it.
+    */
+  private def once(raw: DataFrame, struct: Column): DataFrame =
+    raw.select(inline(array(struct)))
 
   /** [[parseRaceJson]] with corrupt-record accounting. The plain parse
     * silently degrades undecodable payloads (Spark's `from_json` returns
@@ -137,16 +158,17 @@ object F1Ops {
     * channel — so every row carries `parse_ok` plus its raw payload, and
     * a production ingest can count failures and dead-letter them instead
     * of losing data invisibly (at 100 TB a silent 0.1% drop is a
-    * gigabyte-scale hole). Still a narrow map.
+    * gigabyte-scale hole). Still a narrow map, parsed [[once]] per record
+    * however the split filters it.
     */
   def parseRaceJsonAudited(raw: DataFrame, valueCol: String = "value"): DataFrame = {
     val audited = Schemas.raceResultMessage
       .add("_corrupt_record", org.apache.spark.sql.types.StringType)
-    raw
-      .select(col(valueCol).cast("string").as("raw_payload"),
-        from_json(col(valueCol).cast("string"), audited,
+    val payload = col(valueCol).cast("string")
+    once(raw, struct(payload.as("raw_payload"),
+        from_json(payload, audited,
           Map("mode" -> "PERMISSIVE",
-            "columnNameOfCorruptRecord" -> "_corrupt_record")).as("data"))
+            "columnNameOfCorruptRecord" -> "_corrupt_record")).as("data")))
       // a null payload makes from_json return a null struct (so
       // _corrupt_record is null too) — require a non-null payload or the
       // tombstone lands in the clean split as an all-null row

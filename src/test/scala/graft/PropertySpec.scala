@@ -530,4 +530,52 @@ class PropertySpec extends SparkSpec {
       }
     }
   }
+
+  test("flat JSON kernel equals from_json on random flat race records") {
+    import org.apache.spark.sql.types.{BooleanType, IntegerType}
+    val ws = Gen.frequency(6 -> "", 2 -> " ", 1 -> "\t", 1 -> "\n", 1 -> "\r\n  ")
+    val int = Gen.oneOf(
+      Gen.oneOf("0", "-1", "7", "999999999", "-999999999", "1000000000", "2147483647",
+        "-2147483648", "2147483648", "01", "-0", "1.0", "2e1"),
+      Gen.choose(-100000, 100000).map(_.toString),
+      Gen.choose(Int.MinValue, Int.MaxValue).map(_.toString))
+    val str = Gen.oneOf(
+      Gen.alphaNumStr,
+      Gen.oneOf("", "+9.123", "2023-03-05T15:00:00+00:00", "38 laps", "São", "日本",
+        "a\\\"b", "a\\\\b", "\\u00e9", "\\n", "a\tb", "{}[],:")).map(v => "\"" + v + "\"")
+    val bool = Gen.oneOf("true", "false")
+    val anyValue = Gen.oneOf(int, str, bool, Gen.const("null"))
+    def value(t: Option[org.apache.spark.sql.types.DataType]) = t match {
+      case Some(IntegerType) => Gen.frequency(8 -> int, 1 -> Gen.const("null"), 1 -> anyValue)
+      case Some(BooleanType) => Gen.frequency(8 -> bool, 1 -> Gen.const("null"), 1 -> anyValue)
+      case Some(_) => Gen.frequency(8 -> str, 1 -> Gen.const("null"), 1 -> anyValue)
+      case None => anyValue
+    }
+    val schema = graft.model.Schemas.raceResultMessage
+    val names = schema.fieldNames.toSeq ++ Seq("due_ms", "Position", "x")
+    val field = (name: String) => for {
+      v <- value(schema.find(_.name == name).map(_.dataType))
+      (a, b, c) <- Gen.zip(ws, ws, ws)
+    } yield s"$a\"$name\"$b:$c$v"
+    val record = for {
+      k <- Gen.choose(0, names.size)
+      picked <- Gen.pick(k, names)
+      order <- Gen.listOfN(k, Gen.choose(0.0, 1.0))
+      dup <- Gen.frequency(9 -> Gen.const(Nil), 1 -> Gen.pick(1, names).map(_.toSeq))
+      fields <- Gen.sequence[List[String], String]((picked.zip(order).sortBy(_._2).map(_._1) ++ dup).map(field))
+      (a, b, c) <- Gen.zip(ws, ws, ws)
+    } yield s"$a{${fields.mkString(",")}$b}$c"
+    val records = Gen.listOfN(400, record)
+      .pureApply(Gen.Parameters.default, org.scalacheck.rng.Seed(20261021L))
+
+    val (pairs, failed) = ParseParity.withFailedTasks(spark) {
+      ParseParity.parses(spark, records.map(Some(_)))
+    }
+    assert(failed === 0)
+    pairs.zip(records).foreach { case ((k, p), r) => assert(k === p, r) }
+    // both paths ran: the kernel's own rows and from_json's fallback
+    val kernel = ParseParity.kernelOf(spark)
+    val owned = records.count(r => kernel.scan(org.apache.spark.unsafe.types.UTF8String.fromString(r)) != null)
+    assert(owned > records.size / 5 && owned < records.size * 4 / 5, owned)
+  }
 }
